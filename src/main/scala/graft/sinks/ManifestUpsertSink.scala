@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -59,17 +59,20 @@ import org.apache.spark.sql.types.StructType
   *    snapshots — O(changed rows) per question, not O(table) — and the
   *    images let them maintain aggregates differentially (q301).
   *
-  * MERGE-ON-READ DELETES ([[deleteKeysMergeOnRead]]): a `mergeOnRead`
-  * table's DELETEs commit a per-bucket deleted-KEY sidecar instead of
-  * rewriting the touched buckets (the Iceberg-v2 equality-delete shape),
-  * folded by every read as a broadcast anti-join and materialized by the
-  * next bucket rewrite. Deliberately DELETE-only: a merge-on-read UPSERT
-  * (append new rows + dv the replaced keys) is unsound under key-scoped
-  * deletion — the anti-join would kill the replacement row too. Making
-  * it sound needs per-row provenance (Iceberg sequence numbers /
-  * positional bitmaps), which this key-addressed format does not track;
-  * the CoW merge is already ∝ touched-bucket bytes, so the upsert side
-  * has no O(table) cliff to fix.
+  * ONE ROW-LEVEL STATEMENT PIPELINE: upsert, delete and the mixed
+  * single-commit apply are one private pipeline ([[statement]]) that
+  * guards and classifies once, then applies in one of two shapes. The
+  * COPY-ON-WRITE shape rewrites the touched buckets as above. The
+  * MERGE-ON-READ shape ([[upsertMergeOnRead]], [[deleteKeysMergeOnRead]],
+  * [[applyDeltaMergeOnRead]]) leaves every prior data file
+  * byte-identical: new row images append as new files and a per-bucket
+  * deleted-KEY sidecar (a deletion vector, the Iceberg-v2
+  * equality-delete shape) retires the replaced and deleted live rows.
+  * Every read folds the dvs as a broadcast anti-join, masking a key only
+  * in files older than the dv (commit-sequence provenance, so a
+  * replacement row written with its dv survives), and the next bucket
+  * rewrite materializes them. Both shapes write the same change feed,
+  * and a statement that changes no row commits no version in either.
   *
   * Exactly-once over an at-least-once source: the manifest records the
   * micro-batch id; replaying a committed batch (foreachBatch redelivery
@@ -154,619 +157,247 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * reads and retention, which dominate at scale. */
   private val PdateCol = ManifestUpsertSink.PdateCol
 
-  /** MERGE a micro-batch: LWW-dedupe on `orderCol` within the batch,
-    * replace current rows sharing a key, append the rest. `batchId` is
-    * the replay guard — a batch id already committed is skipped.
+  /** MERGE a micro-batch, copy-on-write: LWW-dedupe on `orderCol`
+    * within the batch, replace current rows sharing a key, append the
+    * rest, rewriting only the touched buckets ([[statement]]). `batchId`
+    * is the replay guard — a batch id already committed is skipped.
     * [[ManifestUpsertSink.AdHocBatch]] marks a write OUTSIDE the
     * streaming sequence (a backfill save(), a SQL INSERT/DELETE): it
     * bypasses the guard and LEAVES the committed batch id untouched,
     * exactly as compactions do — synthesizing "next" ids here would
     * collide with the stream's own future micro-batch ids and silently
     * swallow them as replays. */
-  def upsertBatch(batch: DataFrame, orderCol: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val cur = latestManifest(root, store)
-    healFeed(cur)
-    if (batchId != AdHocBatch && cur.exists(_.batchId >= batchId))
-      return // replayed batch: no-op
-    requireSameBuckets(cur)
-    requireNoRetiredColumns(cur, batch.columns)
-    val version = cur.map(_.version + 1).getOrElse(0L)
-    val tag = newTag()
-    // deliberately NOT persisted, though three actions read it (touched
-    // collect, feed write, survivor write): MEASURED at the bench's
-    // 5k-row micro-batches, a MEMORY_AND_DISK persist made the 10-commit
-    // merge loop 16 s → 52-67 s — the cache build (columnar encode of
-    // the wide payload + CacheManager bookkeeping per batch) costs far
-    // more than two recomputes of a small LWW window. A caller merging
-    // truly large batches can persist BEFORE handing the frame over;
-    // the sink must not tax the common micro-batch path for it.
-    val deduped = JdbcUpsertSink.lastWriteWins(batch, keyCol, col(orderCol))
-      .withColumn(BucketCol, bucketExpr)
-    // touched buckets: bounded driver set (≤ 2·`buckets` rows by
-    // construction). The null-key probe piggybacks on this one collect —
-    // the key is non-nullable BY CONTRACT (the DSv2 schema advertises it
-    // to Catalyst, which folds IsNull away on it), so every write path
-    // must enforce it, not just SQL INSERT's store-assignment check.
-    // Probed on the RAW batch keys: LWW never changes the key set, and
-    // pre-window probing skips a full sort shuffle of the batch.
-    val touched = collectTouchedRequireKeys(
-      batch.select(keyColumns: _*).withColumn(BucketCol, bucketExpr))
-    // current rows of the touched buckets — the one table-side read both
-    // the survivor computation and the change feed share
-    val current: Option[DataFrame] = cur.flatMap { m =>
-      val touchedEntries = m.files.filter(f => touched(f.bucket))
-      if (touchedEntries.isEmpty) None
-      else Some(readLogical(spark, m, touchedEntries)) // evolution + dv fold
-    }
-    // ---- change feed: every incoming key is inserted or updated (LWW
-    // upsert never deletes); old/new BEFORE/AFTER row images (JSON of the
-    // name-sorted payload — the Delta CDF contract) let a consumer
-    // maintain downstream aggregates differentially without re-reading
-    // the table (q301), and the payload hashes derived from them spot
-    // value-identical rewrites. Written BEFORE the manifest commit — a
-    // crash in between leaves an orphan the replayed batch overwrites.
-    val newImaged = deduped.select(keyColumns :+
-      payloadImage(deduped).as("new_image"): _*)
-    val changes = (current match {
-      case Some(c) =>
-        newImaged.join(
-          c.select(keyColumns :+ payloadImage(c).as("old_image"): _*),
-          keyCols, "left_outer")
-      case None => newImaged.withColumn("old_image", lit(null).cast("string"))
-    }).select(keyColumns ++ Seq(
-      when(col("old_image").isNull, lit("inserted")).otherwise(lit("updated")).as("change"),
-      // xxhash64 of a NULL input yields the seed, not null — guard so an
-      // insert's old_hash stays null (the classification consumers key on)
-      when(col("old_image").isNull, lit(null).cast("long"))
-        .otherwise(xxhash64(col("old_image"))).as("old_hash"),
-      xxhash64(col("new_image")).as("new_hash"),
-      col("old_image"), col("new_image")): _*)
-    // staged OUTSIDE `_changes/` (a tailing file source lists the glob
-    // continuously — even a dot-dir can be latched mid-write) and bound
-    // to the manifest via the feed= header; renamed to its version name
-    // post-commit — so the feed appears atomically, under the FINAL
-    // version even after a rebase, and a crashed writer's stage is never
-    // visible (the vacuum orphan sweep reclaims it)
-    writeFeed(changes, tag)
-    // ---- copy-on-write bucket rewrite
-    val survivors = current match {
-      case Some(c) =>
-        c.withColumn(BucketCol, bucketExpr)
-          .join(deduped.select(keyColumns: _*), keyCols, "left_anti")
-          // additive schema evolution: a batch may carry columns the
-          // current snapshot lacks (and vice versa after evolution) —
-          // missing sides read as null, the lakehouse ADD COLUMN contract
-          .unionByName(deduped, allowMissingColumns = true)
-      case None => deduped
-    }
-    // per-attempt unique dir: concurrent writers must never share a data
-    // dir (an overwrite write would clobber the other's files before the
-    // commit race is even decided); the version prefix is informative
-    val dataDir = s"$root/data/v$version-$tag"
-    writeData(survivors, dataDir)
-    // list what was just written (driver-side, ≤ touched buckets × files)
-    val written = listParquet(dataDir, store)
-    val commitId =
-      if (batchId == AdHocBatch) cur.map(_.batchId).getOrElse(-1L) else batchId
-    val committedV = commitRebasing(cur, commitId,
-      dataChanged = touched, replaced = touched,
-      written = written, feedStage = Some(s"_stage/$tag"),
-      renames = cur.map(_.renames).getOrElse(Nil),
-      addedCols = cur.map(_.addedCols).getOrElse(Nil),
-      droppedCols = cur.map(_.droppedCols).getOrElse(Nil),
-      writtenSchema = survivors.schema,
-      dvWritten = Nil, dvReplaced = touched,
-      defaults = cur.map(_.defaults).getOrElse(Nil))
-    foldColStats(committedV, Some(deduped))
-  }
+  def upsertBatch(batch: DataFrame, orderCol: String, batchId: Long): Unit =
+    statement(Some(batch), None, orderCol, batchId, morCap = None)
 
-  /** DELETE by key — the third CDC verb (upsert covers insert/update):
-    * remove every row whose key appears in `keys`, rewriting only the
-    * touched buckets (cost ∝ touched bytes, the same copy-on-write
-    * contract as MERGE) and recording a `deleted` change-feed row with
-    * the BEFORE image for each key that actually existed — so IVM
-    * consumers subtract departures exactly as they add arrivals, and a
-    * delete of an absent key is a clean no-op (no feed row, no rewrite
-    * beyond its bucket). Replay-guarded by `batchId` like the merge; a
+  /** DELETE by key, copy-on-write — the third CDC verb (upsert covers
+    * insert/update): remove every row whose key appears in `keys`,
+    * rewriting only the touched buckets and recording a `deleted` feed
+    * row with the BEFORE image per key that actually existed, so IVM
+    * consumers subtract departures exactly as they add arrivals. A
     * bucket whose rows all die simply stops appearing in the manifest. */
-  def deleteKeys(keys: DataFrame, batchId: Long): Unit = {
-    val spark = keys.sparkSession
-    val cur = latestManifest(root, store).getOrElse(return) // empty table: nothing to delete
-    healFeed(Some(cur))
-    if (batchId != AdHocBatch && cur.batchId >= batchId)
-      return // replayed batch: no-op
-    requireSameBuckets(Some(cur))
-    val version = cur.version + 1
-    val tag = newTag()
-    val keyed = keys.select(keyColumns: _*).distinct()
-      .withColumn(BucketCol, bucketExpr)
-    // same piggybacked null-key refusal as the merge: deleting "key =
-    // null" would silently hash the null and rewrite a bucket for nothing
-    val touched = collectTouchedRequireKeys(keyed)
-    val touchedEntries = cur.files.filter(f => touched(f.bucket))
-    if (touchedEntries.isEmpty) return // no touched bucket holds data: no-op
-    val current = readLogical(spark, cur, touchedEntries)
-    // feed first (same crash contract as the merge): one `deleted` row per
-    // key that exists, BEFORE image only
-    val victims = current.join(keyed.select(keyColumns: _*), keyCols, "left_semi")
-    victims.select(keyColumns ++ Seq(lit("deleted").as("change"),
-        xxhash64(payloadImage(victims)).as("old_hash"),
-        lit(null).cast("long").as("new_hash"),
-        payloadImage(victims).as("old_image"),
-        lit(null).cast("string").as("new_image")): _*)
-      .transform(writeFeedFn(tag))
-    val survivors = current
-      .withColumn(BucketCol, bucketExpr)
-      .join(keyed.select(keyColumns: _*), keyCols, "left_anti")
-    val dataDir = s"$root/data/v$version-$tag"
-    writeData(survivors, dataDir)
-    val written = listParquet(dataDir, store)
-    val committedV = commitRebasing(Some(cur),
-      if (batchId == AdHocBatch) cur.batchId else batchId,
-      dataChanged = touched, replaced = touched,
-      written = written, feedStage = Some(s"_stage/$tag"), renames = cur.renames,
-      addedCols = cur.addedCols, droppedCols = cur.droppedCols,
-      writtenSchema = survivors.schema,
-      dvWritten = Nil, dvReplaced = touched,
-      defaults = cur.defaults)
-    foldColStats(committedV, None)
-  }
+  def deleteKeys(keys: DataFrame, batchId: Long): Unit =
+    statement(None, Some(keys), "", batchId, morCap = None)
 
-  /** MERGE-ON-READ DELETE — the deletion-vector verb: remove keys by
-    * committing a tiny per-bucket KEY-LIST sidecar instead of rewriting
-    * the touched buckets' data files (which stay BYTE-IDENTICAL — the
-    * commit is a manifest edit plus a small parquet of the deleted key
-    * tuples, the Iceberg-v2 equality-delete shape). At 100 TB with
-    * trickle deletes this is the difference between O(keys) and
-    * O(bucket bytes) per statement — copy-on-write `deleteKeys` rewrites
-    * every touched bucket for a one-row DELETE. Every read surface folds
-    * the sidecar (anti-join by key, broadcast — see
-    * [[ManifestUpsertSink.applyDv]]); the next rewrite of a bucket
-    * (merge, CoW delete, compaction) MATERIALIZES its dvs and clears
-    * them.
-    *
-    * The CDC contract is identical to the CoW delete: one `deleted` feed
-    * row with the BEFORE image per key that actually existed (the
-    * touched buckets are READ to classify — O(touched bytes) read, zero
-    * data write), deleting an absent or already-dv-deleted key is a
-    * clean no-op, and a statement with zero victims commits nothing.
-    *
-    * `maxDvRowsPerBucket` bounds the merge-on-read debt: when a touched
-    * bucket's accumulated dv keys (live + this statement's) would exceed
-    * it, the WHOLE statement falls back to the copy-on-write delete —
-    * which materializes that bucket's backlog as it rewrites. The cap is
-    * what keeps the read-side fold a broadcast and the DSv2 scan's
-    * driver-held key set bounded by construction. */
+  /** DELETE by key, merge-on-read — the deletion-vector verb: the
+    * touched buckets' data files stay BYTE-IDENTICAL and the commit is a
+    * manifest edit plus a small parquet of the deleted key tuples (the
+    * Iceberg-v2 equality-delete shape), O(keys) instead of O(bucket
+    * bytes) per statement. Every read surface folds the sidecar
+    * ([[ManifestUpsertSink.applyDv]]); the next rewrite of a bucket
+    * materializes its dvs. Feed contract identical to [[deleteKeys]];
+    * `maxDvRowsPerBucket` bounds the dv debt (see [[statement]]). */
   def deleteKeysMergeOnRead(keys: DataFrame, batchId: Long,
-      maxDvRowsPerBucket: Long = DefaultDvMaxRowsPerBucket): Unit = {
-    val spark = keys.sparkSession
-    val cur = latestManifest(root, store).getOrElse(return) // empty table: nothing to delete
-    healFeed(Some(cur))
-    if (batchId != AdHocBatch && cur.batchId >= batchId)
-      return // replayed batch: no-op
-    requireSameBuckets(Some(cur))
-    val version = cur.version + 1
-    val tag = newTag()
-    val keyed = keys.select(keyColumns: _*).distinct()
-      .withColumn(BucketCol, bucketExpr)
-    val touched = collectTouchedRequireKeys(keyed)
-    val touchedEntries = cur.files.filter(f => touched(f.bucket))
-    if (touchedEntries.isEmpty) return // no touched bucket holds data: no-op
-    // current = evolution + EXISTING dv fold: a re-delete of a
-    // dv-deleted key sees it absent and records nothing — each key lives
-    // in at most one dv file, keeping the sidecar arithmetic exact
-    val current = readLogical(spark, cur, touchedEntries)
-    val victims = current.join(keyed.select(keyColumns: _*), keyCols, "left_semi")
-    // feed first (same crash contract as the CoW delete)
-    val feed = victims.select(keyColumns ++ Seq(lit("deleted").as("change"),
-        xxhash64(payloadImage(victims)).as("old_hash"),
-        lit(null).cast("long").as("new_hash"),
-        payloadImage(victims).as("old_image"),
-        lit(null).cast("string").as("new_image")): _*)
-    writeFeed(feed, tag)
-    // the dv sidecar: ONLY the victim key tuples — read back from the
-    // just-staged feed (O(victims), already classified) instead of
-    // recomputing the O(touched-bucket-bytes) semi-join a second time.
-    // Explicit schema: a victimless statement stages ZERO part files,
-    // which schema inference would refuse.
-    val newDvs = writeDvSidecar(
-      spark.read.schema(feed.schema).parquet(s"$root/_stage/$tag")
-        .select(keyColumns: _*),
-      version, tag, touched.size)
-    if (newDvs.isEmpty) { // zero victims: a DELETE must never create a version
-      deleteTree(store, s"$root/_stage/$tag")
-      store.deleteDirIfEmpty(s"$root/_stage")
-      return
-    }
-    val dvTouched = newDvs.map(_.bucket).toSet
-    // cap: accumulated dv debt per bucket stays broadcast-sized, or the
-    // statement routes to copy-on-write (which materializes the backlog)
-    val overCap = dvTouched.exists { b =>
-      cur.dvsOf(b).map(_.rows).sum +
-        newDvs.filter(_.bucket == b).map(_.rows).sum > math.max(1L, maxDvRowsPerBucket)
-    }
-    if (overCap) {
-      deleteTree(store, s"$root/data/v$version-$tag-dv")
-      deleteTree(store, s"$root/_stage/$tag")
-      store.deleteDirIfEmpty(s"$root/_stage")
-      deleteKeys(keys, batchId)
-      return
-    }
-    val committedV = commitRebasing(Some(cur),
-      if (batchId == AdHocBatch) cur.batchId else batchId,
-      dataChanged = dvTouched, replaced = Set.empty,
-      written = Nil, feedStage = Some(s"_stage/$tag"), renames = cur.renames,
-      addedCols = cur.addedCols, droppedCols = cur.droppedCols,
-      // no data file written: an empty written-schema union keeps the
-      // chain's stamp verbatim
-      writtenSchema = new StructType(),
-      // APPEND shape: only the NEW sidecar files ship; the base dv
-      // entries are composed from the WINNING chain's snapshot on every
-      // commit attempt inside commitRebasing — a pre-race capture of
-      // cur.dvs here would re-attach entries a concurrent compaction
-      // just materialized and silently break the COUNT subtraction's
-      // exactness (the r14 advisory)
-      dvWritten = newDvs,
-      dvReplaced = Set.empty,
-      defaults = cur.defaults,
-      append = true)
-    foldColStats(committedV, None)
-  }
+      maxDvRowsPerBucket: Long = DefaultDvMaxRowsPerBucket): Unit =
+    statement(None, Some(keys), "", batchId, Some(maxDvRowsPerBucket))
 
-  /** MERGE-ON-READ UPSERT — the write-economics counterpart of
-    * [[deleteKeysMergeOnRead]] for trickle UPDATES: merge `batch` by
-    * APPENDING its rows as new data files and committing a deletion
-    * vector for the keys that already existed, leaving every prior data
-    * file BYTE-IDENTICAL. A 10-row update on a 100-TB table is then
-    * O(10 rows + key sidecar), not O(touched bucket bytes) — the
-    * copy-on-write [[upsertBatch]] rewrites every touched bucket.
-    *
-    * Soundness comes from COMMIT-SEQUENCE PROVENANCE (the Iceberg-v2
-    * sequence-number model): every file and dv entry carries the version
-    * of the commit that produced it, and the read fold masks a dv'd key
-    * only in files with `file.seq < dv.seq` — so the dv this commit
-    * writes retires the key's OLD rows (older sequences) while the
-    * replacement row, written at the dv's own sequence, survives. A
-    * key-scoped dv without the sequence test would anti-join the
-    * replacement away — the refusal documented in earlier rounds, now
-    * lifted by the provenance.
-    *
-    * Contract mirrors [[upsertBatch]]: LWW-dedupe within the batch,
-    * replay-guarded by `batchId`, CDC feed classifying inserted/updated
-    * with before/after images, additive schema evolution. The dv lists
-    * ONLY keys that currently exist (each upsert masks exactly one live
-    * instance, keeping the manifest's row subtraction exact: COUNT =
-    * Σfile rows − Σdv rows still holds with stacked upserts). The
-    * per-bucket dv cap routes an over-cap statement to the
-    * copy-on-write merge, which materializes the bucket's backlog as it
-    * rewrites — the same debt bound as the MoR delete. Reads of buckets
-    * with interleaved file/dv sequences take the sequence-aware fold
-    * ([[ManifestUpsertSink.readLogical]]); compaction collapses them
-    * back to the single-anti-join shape. */
+  /** MERGE a micro-batch, merge-on-read: the batch's rows APPEND as new
+    * data files and a deletion vector retires the keys that already
+    * existed, leaving every prior data file byte-identical — a 10-row
+    * update costs O(10 rows + key sidecar), not O(touched bucket bytes).
+    * Feed contract identical to [[upsertBatch]]. */
   def upsertMergeOnRead(batch: DataFrame, orderCol: String, batchId: Long,
-      maxDvRowsPerBucket: Long = DefaultDvMaxRowsPerBucket): Unit = {
-    val spark = batch.sparkSession
-    val cur = latestManifest(root, store)
-    healFeed(cur)
-    if (batchId != AdHocBatch && cur.exists(_.batchId >= batchId))
-      return // replayed batch: no-op
-    requireSameBuckets(cur)
-    requireNoRetiredColumns(cur, batch.columns)
-    val version = cur.map(_.version + 1).getOrElse(0L)
-    val tag = newTag()
-    val deduped = JdbcUpsertSink.lastWriteWins(batch, keyCol, col(orderCol))
-      .withColumn(BucketCol, bucketExpr)
-    // raw-batch probe: LWW never changes the key set (see upsertBatch)
-    val touched = collectTouchedRequireKeys(
-      batch.select(keyColumns: _*).withColumn(BucketCol, bucketExpr))
-    val current: Option[DataFrame] = cur.flatMap { m =>
-      val touchedEntries = m.files.filter(f => touched(f.bucket))
-      if (touchedEntries.isEmpty) None
-      else Some(readLogical(spark, m, touchedEntries)) // evolution + dv fold
-    }
-    // change feed: identical classification to the CoW merge — the
-    // reader-visible semantics of the two merge shapes must not differ
-    val newImaged = deduped.select(keyColumns :+
-      payloadImage(deduped).as("new_image"): _*)
-    val changes = (current match {
-      case Some(c) =>
-        newImaged.join(
-          c.select(keyColumns :+ payloadImage(c).as("old_image"): _*),
-          keyCols, "left_outer")
-      case None => newImaged.withColumn("old_image", lit(null).cast("string"))
-    }).select(keyColumns ++ Seq(
-      when(col("old_image").isNull, lit("inserted")).otherwise(lit("updated")).as("change"),
-      when(col("old_image").isNull, lit(null).cast("long"))
-        .otherwise(xxhash64(col("old_image"))).as("old_hash"),
-      xxhash64(col("new_image")).as("new_hash"),
-      col("old_image"), col("new_image")): _*)
-    writeFeed(changes, tag)
-    // the dv sidecar: keys that ALREADY EXIST (the replaced instances) —
-    // pure inserts need no masking and must not enter the subtraction.
-    // Derived from the JUST-STAGED feed (change = 'updated' ⇔ the key had
-    // a live row) instead of a second readLogical + semi-join against the
-    // touched buckets: the feed is O(batch) and already classified — the
-    // recompute was O(touched-bucket bytes) per statement (guide §1.2:
-    // don't compute things twice that one pass already knows).
-    val newDvs: Seq[DvEntry] = current match {
-      case None => Nil
-      case Some(_) =>
-        val victims = spark.read.schema(changes.schema)
-          .parquet(s"$root/_stage/$tag")
-          .filter(col("change") === "updated")
-          .select(keyColumns: _*)
-        writeDvSidecar(victims, version, tag, touched.size)
-    }
-    // cap: accumulated dv debt per bucket stays broadcast-sized, or the
-    // statement routes to copy-on-write (which materializes the backlog)
-    val overCap = cur.exists(m => touched.exists { b =>
-      m.dvsOf(b).map(_.rows).sum +
-        newDvs.filter(_.bucket == b).map(_.rows).sum > math.max(1L, maxDvRowsPerBucket)
-    })
-    if (overCap) {
-      if (newDvs.nonEmpty) deleteTree(store, s"$root/data/v$version-$tag-dv")
-      deleteTree(store, s"$root/_stage/$tag")
-      store.deleteDirIfEmpty(s"$root/_stage")
-      upsertBatch(batch, orderCol, batchId)
-      return
-    }
-    // the appended row images — every prior data file stays byte-identical
-    val dataDir = s"$root/data/v$version-$tag"
-    writeData(deduped, dataDir)
-    val written = listParquet(dataDir, store)
-    val commitId =
-      if (batchId == AdHocBatch) cur.map(_.batchId).getOrElse(-1L) else batchId
-    val committedV = commitRebasing(cur, commitId,
-      dataChanged = touched, replaced = Set.empty,
-      written = written, feedStage = Some(s"_stage/$tag"),
-      renames = cur.map(_.renames).getOrElse(Nil),
-      addedCols = cur.map(_.addedCols).getOrElse(Nil),
-      droppedCols = cur.map(_.droppedCols).getOrElse(Nil),
-      writtenSchema = deduped.schema,
-      dvWritten = newDvs, dvReplaced = Set.empty,
-      defaults = cur.map(_.defaults).getOrElse(Nil),
-      append = true)
-    foldColStats(committedV, Some(deduped))
-  }
+      maxDvRowsPerBucket: Long = DefaultDvMaxRowsPerBucket): Unit =
+    statement(Some(batch), None, orderCol, batchId, Some(maxDvRowsPerBucket))
 
-  /** SINGLE-COMMIT row-level apply: MERGE `batch` and DELETE `delKeys`
-    * as ONE committed version with ONE change feed — the atomicity a SQL
-    * statement needs. A key-moving `UPDATE t SET key = key + 1` (or a
-    * MERGE mixing WHEN MATCHED UPDATE/DELETE) produces upserts at new
-    * keys AND deletes of vacated old keys; applying them as two commits
-    * (upsertBatch then deleteKeys) would let a crash between them leave
-    * the statement half-applied — rows live at both old and new keys,
-    * with readers observing that intermediate version as a committed
-    * snapshot. Here survivors of every touched bucket are computed once
-    * against (upserted keys ∪ deleted keys) and the combined feed
-    * (inserted/updated/deleted, with before/after images) lands under
-    * the single version. A key BOTH upserted and deleted in one call is
-    * an UPSERT (the row-level caller anti-joins re-occupied keys out of
-    * its delete set already; this just makes the verb total). Replay
-    * guard and rename/bucket/null-key hygiene exactly as the two
-    * component verbs. */
+  /** SINGLE-COMMIT row-level apply, copy-on-write: MERGE `batch` and
+    * DELETE `delKeys` as ONE committed version with ONE change feed —
+    * the atomicity a SQL statement needs. A key-moving `UPDATE t SET
+    * key = key + 1` (or a MERGE mixing WHEN MATCHED UPDATE/DELETE)
+    * produces upserts at new keys AND deletes of vacated old keys; as
+    * two commits, a crash or a reader between them would see the
+    * statement half-applied. A key BOTH upserted and deleted is an
+    * UPSERT. A schema-less `batch` (a SQL DELETE's delta carries no row
+    * images) makes a pure delete. */
   def applyDelta(batch: DataFrame, delKeys: DataFrame, orderCol: String,
-      batchId: Long): Unit = {
-    val spark = batch.sparkSession
+      batchId: Long): Unit =
+    statement(rowImages(batch), Some(delKeys), orderCol, batchId, morCap = None)
+
+  /** [[applyDelta]], merge-on-read: new row images append and ONE
+    * deletion-vector generation retires every replaced, deleted and
+    * moved-away live instance at the commit's sequence. */
+  def applyDeltaMergeOnRead(batch: DataFrame, delKeys: DataFrame,
+      orderCol: String, batchId: Long,
+      maxDvRowsPerBucket: Long = DefaultDvMaxRowsPerBucket): Unit =
+    statement(rowImages(batch), Some(delKeys), orderCol, batchId,
+      Some(maxDvRowsPerBucket))
+
+  private def rowImages(batch: DataFrame): Option[DataFrame] =
+    Some(batch).filter(_.columns.nonEmpty)
+
+  /** THE row-level statement: every write verb above is this pipeline
+    * with a side absent (None — never an empty frame that would cost a
+    * collect) and/or a merge-on-read dv cap.
+    *
+    *  1. Guards, once: replay (`batchId`), the committed bucket/key/
+    *     partition layout, retired column names in the upserts.
+    *  2. Classify, once: the upserts' LWW window; one touched-bucket
+    *     collect per present side, which also refuses null keys; one
+    *     `readLogical` of the touched buckets; one combined change feed
+    *     — upserts classify inserted/updated against the current rows,
+    *     deletes record only keys that EXIST, with BEFORE/AFTER images
+    *     (the Delta CDF contract). The feed is staged OUTSIDE `_changes/`
+    *     (a tailing file source lists that glob continuously) and renamed
+    *     to its FINAL version post-commit, so a crashed writer's stage is
+    *     never visible. Its write is OBSERVED: the row count and the
+    *     non-`inserted` count come back with the write's own job. Zero
+    *     rows means the statement changes nothing: the stage is dropped
+    *     and no version commits, in both modes.
+    *  3. Apply, COPY-ON-WRITE (`morCap = None`): each touched bucket's
+    *     survivors — current rows minus replaced and deleted keys — union
+    *     the new row images and replace the bucket's files; the rewrite
+    *     read-folds and so materializes the bucket's dvs. Or
+    *     MERGE-ON-READ (`morCap = Some(cap)`): the new row images APPEND
+    *     and one dv generation lists every retired LIVE instance (the
+    *     feed's non-`inserted` keys, read back from the stage), so prior
+    *     data files stay byte-identical. Soundness comes from
+    *     commit-sequence provenance: the read fold masks a dv'd key only
+    *     in files with `file.seq < dv.seq`, so the replacement row
+    *     written at the dv's own sequence survives. The dv must hold
+    *     exactly the observed non-inserted count, or the statement fails
+    *     with nothing committed — COUNT = Σfile rows − Σdv rows depends
+    *     on it. A statement that would push a bucket's dv rows past `cap`
+    *     re-runs as copy-on-write, which materializes the backlog; the
+    *     cap keeps the read-side fold a broadcast.
+    *  4. One [[commitRebasing]] and [[foldColStats]]. */
+  private def statement(upserts: Option[DataFrame], deletes: Option[DataFrame],
+      orderCol: String, batchId: Long, morCap: Option[Long]): Unit = {
     val cur = latestManifest(root, store)
+    if (upserts.isEmpty && cur.isEmpty) return // delete on an empty table
     healFeed(cur)
     if (batchId != AdHocBatch && cur.exists(_.batchId >= batchId))
       return // replayed batch: no-op
     requireSameBuckets(cur)
-    requireNoRetiredColumns(cur, batch.columns)
+    upserts.foreach(u => requireNoRetiredColumns(cur, u.columns))
+    val spark = upserts.orElse(deletes).get.sparkSession
     val version = cur.map(_.version + 1).getOrElse(0L)
     val tag = newTag()
-    // a PURE-DELETE statement ships a schema-less upsert frame (a SQL
-    // DELETE's delta carries no row images) — there is nothing to LWW or
-    // anti-join against
-    val hasUps = batch.columns.nonEmpty
-    val deduped =
-      if (hasUps)
-        JdbcUpsertSink.lastWriteWins(batch, keyCol, col(orderCol))
-          .withColumn(BucketCol, bucketExpr)
-      else batch
-    val touchedUps =
-      if (hasUps) collectTouchedRequireKeys(
-        batch.select(keyColumns: _*).withColumn(BucketCol, bucketExpr))
-      else Set.empty[Long]
+    // probed on the RAW batch keys: LWW never changes the key set, and
+    // pre-window probing skips a full sort shuffle of the batch
+    val touchedUps = upserts.fold(Set.empty[Long])(b => collectTouchedRequireKeys(
+      b.select(keyColumns: _*).withColumn(BucketCol, bucketExpr)))
+    // deliberately NOT persisted, though three actions read it: MEASURED
+    // at the bench's 5k-row micro-batches, a persist made a 10-commit
+    // merge loop 16 s → 52-67 s. A caller merging truly large batches
+    // can persist BEFORE handing the frame over. A side that touched no
+    // bucket holds no row and drops out here.
+    val ups = upserts.filter(_ => touchedUps.nonEmpty).map(b =>
+      JdbcUpsertSink.lastWriteWins(b, keyCol, col(orderCol)).withColumn(BucketCol, bucketExpr))
     // deletes of keys re-occupied by an upsert resolve as upserts
-    val keyedDel = {
-      val base = delKeys.select(keyColumns: _*).distinct()
-      (if (hasUps) base.join(deduped.select(keyColumns: _*), keyCols, "left_anti")
-       else base).withColumn(BucketCol, bucketExpr)
+    val keyedDel = deletes.map { d =>
+      val keys = d.select(keyColumns: _*).distinct()
+      ups.fold(keys)(u => keys.join(u.select(keyColumns: _*), keyCols, "left_anti"))
+        .withColumn(BucketCol, bucketExpr)
     }
-    val touchedDel = collectTouchedRequireKeys(keyedDel)
+    val touchedDel = keyedDel.fold(Set.empty[Long])(collectTouchedRequireKeys)
+    val dels = keyedDel.filter(_ => touchedDel.nonEmpty)
     val touched = touchedUps ++ touchedDel
-    if (touched.isEmpty) return // empty statement: nothing to commit
+    // current rows of the touched buckets — the one table-side read the
+    // feed and the survivors share
     val current: Option[DataFrame] = cur.flatMap { m =>
       val touchedEntries = m.files.filter(f => touched(f.bucket))
       if (touchedEntries.isEmpty) None
       else Some(readLogical(spark, m, touchedEntries)) // evolution + dv fold
     }
-    // pure delete touching no stored bucket (or an empty table): no-op,
-    // matching deleteKeys — a DELETE must never CREATE a version
-    if (touchedUps.isEmpty && current.isEmpty) return
-    // combined feed: the merge half classifies inserted/updated against
-    // the current rows; the delete half records only keys that EXIST
-    val changes = deltaChanges(deduped, keyedDel, current, hasUps)
-      .getOrElse(return) // unreachable: guarded above
-    writeFeed(changes, tag)
-    // one survivor pass per touched bucket: drop replaced AND deleted
-    // keys, union the new row images
-    val gone =
-      if (hasUps) deduped.select(keyColumns: _*)
-        .unionByName(keyedDel.select(keyColumns: _*))
-      else keyedDel.select(keyColumns: _*)
-    val survivors = (current, hasUps) match {
-      case (Some(c), true) =>
-        c.withColumn(BucketCol, bucketExpr)
-          .join(gone, keyCols, "left_anti")
-          .unionByName(deduped, allowMissingColumns = true)
-      case (Some(c), false) =>
-        c.withColumn(BucketCol, bucketExpr).join(gone, keyCols, "left_anti")
-      case (None, _) => deduped
-    }
-    val dataDir = s"$root/data/v$version-$tag"
-    writeData(survivors, dataDir)
-    val written = listParquet(dataDir, store)
-    val commitId =
-      if (batchId == AdHocBatch) cur.map(_.batchId).getOrElse(-1L) else batchId
-    val committedV = commitRebasing(cur, commitId,
-      dataChanged = touched, replaced = touched,
-      written = written, feedStage = Some(s"_stage/$tag"),
-      renames = cur.map(_.renames).getOrElse(Nil),
-      addedCols = cur.map(_.addedCols).getOrElse(Nil),
-      droppedCols = cur.map(_.droppedCols).getOrElse(Nil),
-      writtenSchema = survivors.schema,
-      dvWritten = Nil, dvReplaced = touched,
-      defaults = cur.map(_.defaults).getOrElse(Nil))
-    foldColStats(committedV, Some(deduped))
-  }
-
-  /** The row-level statement's combined change feed — IDENTICAL
-    * classification for the copy-on-write ([[applyDelta]]) and
-    * merge-on-read ([[applyDeltaMergeOnRead]]) apply shapes: the CDC
-    * semantics readers observe must not depend on which write economics
-    * served the statement. The merge half classifies inserted/updated
-    * against the current rows; the delete half records only keys that
-    * EXIST. None when the statement produced no changes at all. */
-  private def deltaChanges(deduped: DataFrame, keyedDel: DataFrame,
-      current: Option[DataFrame], hasUps: Boolean): Option[DataFrame] = {
-    val upChanges: Option[DataFrame] = if (!hasUps) None else Some {
-      val newImaged = deduped.select(keyColumns :+
-        payloadImage(deduped).as("new_image"): _*)
-      (current match {
-        case Some(c) =>
-          newImaged.join(
-            c.select(keyColumns :+ payloadImage(c).as("old_image"): _*),
-            keyCols, "left_outer")
-        case None => newImaged.withColumn("old_image", lit(null).cast("string"))
-      }).select(keyColumns ++ Seq(
+    if (ups.isEmpty && current.isEmpty) return // deletes in buckets holding no data
+    val upFeed = ups.map { u =>
+      val newImaged = u.select(keyColumns :+ payloadImage(u).as("new_image"): _*)
+      current.fold(newImaged.withColumn("old_image", lit(null).cast("string"))) { c =>
+        newImaged.join(c.select(keyColumns :+ payloadImage(c).as("old_image"): _*),
+          keyCols, "left_outer")
+      }.select(keyColumns ++ Seq(
         when(col("old_image").isNull, lit("inserted")).otherwise(lit("updated")).as("change"),
+        // xxhash64 of a NULL input yields the seed, not null — guard so an
+        // insert's old_hash stays null (the classification consumers key on)
         when(col("old_image").isNull, lit(null).cast("long"))
           .otherwise(xxhash64(col("old_image"))).as("old_hash"),
         xxhash64(col("new_image")).as("new_hash"),
         col("old_image"), col("new_image")): _*)
     }
-    val delChanges: Option[DataFrame] = current.map { c =>
-      val victims = c.join(keyedDel.select(keyColumns: _*), keyCols, "left_semi")
+    val delFeed = for (c <- current; d <- dels) yield {
+      val victims = c.join(d.select(keyColumns: _*), keyCols, "left_semi")
       victims.select(keyColumns ++ Seq(lit("deleted").as("change"),
         xxhash64(payloadImage(victims)).as("old_hash"),
         lit(null).cast("long").as("new_hash"),
         payloadImage(victims).as("old_image"),
         lit(null).cast("string").as("new_image")): _*)
     }
-    (upChanges, delChanges) match {
-      case (Some(u), Some(dl)) => Some(u.unionByName(dl))
-      case (u, dl) => u.orElse(dl)
-    }
-  }
-
-  /** SINGLE-COMMIT merge-on-read row-level apply — the MIXED-statement
-    * write economics: a MERGE with DELETE branches, or a key-moving
-    * UPDATE, on a `mergeOnRead` table commits ONE version that (a)
-    * APPENDS the statement's new row images as new files and (b)
-    * records ONE deletion-vector generation listing every retired LIVE
-    * instance — replaced keys, deleted keys, and moved-away old keys —
-    * at the same commit sequence. Every prior data file stays
-    * byte-identical; the sequence-aware fold serves reads (a
-    * replacement row written at sequence s survives the dv at s because
-    * the mask applies only to files with `file.seq < dv.seq`, while the
-    * deleted and moved-away keys — with no replacement at s — fold
-    * away). Statement cost is O(changed rows), not O(touched-bucket
-    * bytes): the last row-level statement class that paid copy-on-write.
-    *
-    * Contract: [[applyDelta]]'s atomicity (one version, one combined
-    * change feed; a key both upserted and deleted resolves as an
-    * upsert) + [[upsertMergeOnRead]]'s dv bookkeeping (the dv lists
-    * only keys that currently exist — each statement retires exactly
-    * one live instance per key, so COUNT = Σfile rows − Σdv rows stays
-    * exact under stacking; the per-bucket dv cap routes over-cap
-    * statements to the copy-on-write [[applyDelta]], which materializes
-    * the bucket's backlog as it rewrites). Pure deletes take
-    * [[deleteKeysMergeOnRead]] (no data files to append); this method
-    * requires row images. */
-  def applyDeltaMergeOnRead(batch: DataFrame, delKeys: DataFrame,
-      orderCol: String, batchId: Long,
-      maxDvRowsPerBucket: Long = DefaultDvMaxRowsPerBucket): Unit = {
-    require(batch.columns.nonEmpty,
-      "applyDeltaMergeOnRead needs row images — pure deletes take deleteKeysMergeOnRead")
-    val spark = batch.sparkSession
-    val cur = latestManifest(root, store)
-    healFeed(cur)
-    if (batchId != AdHocBatch && cur.exists(_.batchId >= batchId))
-      return // replayed batch: no-op
-    requireSameBuckets(cur)
-    requireNoRetiredColumns(cur, batch.columns)
-    val version = cur.map(_.version + 1).getOrElse(0L)
-    val tag = newTag()
-    val deduped = JdbcUpsertSink.lastWriteWins(batch, keyCol, col(orderCol))
-      .withColumn(BucketCol, bucketExpr)
-    val touchedUps = collectTouchedRequireKeys(
-      batch.select(keyColumns: _*).withColumn(BucketCol, bucketExpr))
-    // deletes of keys re-occupied by an upsert resolve as upserts
-    val keyedDel = delKeys.select(keyColumns: _*).distinct()
-      .join(deduped.select(keyColumns: _*), keyCols, "left_anti")
-      .withColumn(BucketCol, bucketExpr)
-    val touchedDel = collectTouchedRequireKeys(keyedDel)
-    val touched = touchedUps ++ touchedDel
-    if (touched.isEmpty) return // empty statement: nothing to commit
-    val current: Option[DataFrame] = cur.flatMap { m =>
-      val touchedEntries = m.files.filter(f => touched(f.bucket))
-      if (touchedEntries.isEmpty) None
-      else Some(readLogical(spark, m, touchedEntries)) // evolution + dv fold
-    }
-    val changes = deltaChanges(deduped, keyedDel, current, hasUps = true)
-      .getOrElse(return) // unreachable: hasUps guaranteed
-    writeFeed(changes, tag)
-    // ONE dv generation for the whole statement: every LIVE instance it
-    // retires — replaced keys (the upserts' current rows) and deleted
-    // keys. Keys with no live row (pure inserts, deletes of absent keys)
-    // must not enter the subtraction. Derived from the just-staged feed
-    // (change = 'updated' ⇔ a replaced live row, 'deleted' ⇔ a deleted
-    // live row) — O(changes) instead of a second O(touched-bucket-bytes)
-    // semi-join against the snapshot.
-    val newDvs: Seq[DvEntry] = current match {
-      case None => Nil
-      case Some(_) =>
-        val victims = spark.read.schema(changes.schema)
-          .parquet(s"$root/_stage/$tag")
-          .filter(col("change") =!= "inserted")
-          .select(keyColumns: _*)
-        writeDvSidecar(victims, version, tag, touched.size)
-    }
-    // cap: accumulated dv debt per bucket stays broadcast-sized, or the
-    // statement routes to copy-on-write (which materializes the backlog)
-    val overCap = cur.exists(m => touched.exists { b =>
-      m.dvsOf(b).map(_.rows).sum +
-        newDvs.filter(_.bucket == b).map(_.rows).sum > math.max(1L, maxDvRowsPerBucket)
-    })
-    if (overCap) {
-      if (newDvs.nonEmpty) deleteTree(store, s"$root/data/v$version-$tag-dv")
-      deleteTree(store, s"$root/_stage/$tag")
-      store.deleteDirIfEmpty(s"$root/_stage")
-      applyDelta(batch, delKeys, orderCol, batchId)
-      return
-    }
-    // the appended row images — every prior data file stays byte-identical
+    val feed = (upFeed ++ delFeed).reduce(_ unionByName _)
+    val stage = s"$root/_stage/$tag"
+    def dropStage(): Unit = { deleteTree(store, stage); store.deleteDirIfEmpty(s"$root/_stage") }
+    val (feedRows, retired) = writeFeedCounted(feed, tag)
+    if (feedRows == 0) { dropStage(); return } // changes no row: commits no version
+    // per-attempt unique dir: concurrent writers must never share a data
+    // dir; the version prefix is informative
     val dataDir = s"$root/data/v$version-$tag"
-    writeData(deduped, dataDir)
-    val written = listParquet(dataDir, store)
-    val commitId =
-      if (batchId == AdHocBatch) cur.map(_.batchId).getOrElse(-1L) else batchId
-    val committedV = commitRebasing(cur, commitId,
-      dataChanged = touched, replaced = Set.empty,
+    val (changed, written, writtenSchema, newDvs) = morCap match {
+      case None =>
+        val gone = (ups ++ dels).map(_.select(keyColumns: _*)).reduce(_ unionByName _)
+        val survivors = current.fold(ups.get) { c =>
+          val kept = c.withColumn(BucketCol, bucketExpr).join(gone, keyCols, "left_anti")
+          // additive schema evolution: a batch may carry columns the
+          // current snapshot lacks (and vice versa) — missing sides read
+          // as null, the lakehouse ADD COLUMN contract
+          ups.fold(kept)(kept.unionByName(_, allowMissingColumns = true))
+        }
+        writeData(survivors, dataDir)
+        (touched, listParquet(dataDir, store), survivors.schema, Seq.empty[DvEntry])
+      case Some(cap) =>
+        val dvs =
+          if (retired == 0) Nil
+          else {
+            beforeDvDerive(stage)
+            writeDvSidecar(spark.read.schema(feed.schema).parquet(stage)
+              .filter(col("change") =!= "inserted").select(keyColumns: _*),
+              version, tag, touched.size)
+          }
+        def abandon(): Unit = { deleteTree(store, s"$dataDir-dv"); dropStage() }
+        val dvRows = dvs.map(_.rows).sum
+        if (dvRows != retired) {
+          abandon()
+          throw new IllegalStateException(
+            s"deletion-vector invariant broken under $root: the dv holds $dvRows key(s) " +
+              s"but the staged feed retires $retired live row(s) — a short stage listing " +
+              "or duplicate live keys; nothing committed")
+        }
+        // the buckets whose rows change — where rows append and where a
+        // dv retires rows: the rebase conflict set and the cap's scope
+        val changed = touchedUps ++ dvs.map(_.bucket)
+        val overCap = cur.exists(m => changed.exists { b =>
+          m.dvsOf(b).map(_.rows).sum +
+            dvs.filter(_.bucket == b).map(_.rows).sum > math.max(1L, cap)
+        })
+        if (overCap) {
+          abandon()
+          return statement(upserts, deletes, orderCol, batchId, morCap = None)
+        }
+        ups.foreach(writeData(_, dataDir))
+        (changed, if (ups.isEmpty) Nil else listParquet(dataDir, store),
+          ups.fold(new StructType())(_.schema), dvs)
+    }
+    val mor = morCap.isDefined
+    val committedV = commitRebasing(cur,
+      if (batchId == AdHocBatch) cur.map(_.batchId).getOrElse(-1L) else batchId,
+      dataChanged = changed, replaced = if (mor) Set.empty else touched,
       written = written, feedStage = Some(s"_stage/$tag"),
       renames = cur.map(_.renames).getOrElse(Nil),
       addedCols = cur.map(_.addedCols).getOrElse(Nil),
       droppedCols = cur.map(_.droppedCols).getOrElse(Nil),
-      writtenSchema = deduped.schema,
-      dvWritten = newDvs, dvReplaced = Set.empty,
+      writtenSchema = writtenSchema,
+      // merge-on-read APPENDS: the base file and dv entries are composed
+      // from the WINNING chain on every commit attempt — a pre-race
+      // capture of cur.dvs would re-attach entries a concurrent
+      // compaction just materialized
+      dvWritten = newDvs, dvReplaced = if (mor) Set.empty else touched,
       defaults = cur.map(_.defaults).getOrElse(Nil),
-      append = true)
-    foldColStats(committedV, Some(deduped))
+      append = mor)
+    foldColStats(committedV, ups)
   }
+
+  /** Test seam: invoked between the merge-on-read statement's staged
+    * feed write and the dv derivation that reads the stage back.
+    * Production no-op. */
+  protected def beforeDvDerive(stageDir: String): Unit = ()
 
   /** The one data-file writer: every version's files are written with a
     * parquet BLOOM FILTER on the key column, so point lookups that
@@ -1104,6 +735,17 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
   private def writeFeed(changes: DataFrame, tag: String): Unit =
     changes.write.mode("overwrite").parquet(s"$root/_stage/$tag")
 
+  /** [[writeFeed]] with the feed's row count and its non-`inserted`
+    * (retired live row) count OBSERVED by the write's own job — no extra
+    * Spark action, also for an empty feed. */
+  private def writeFeedCounted(changes: DataFrame, tag: String): (Long, Long) = {
+    val seen = Observation()
+    writeFeed(changes.observe(seen, count(lit(1)).as("rows"),
+      count(when(col("change") =!= "inserted", true)).as("retired")), tag)
+    val m = seen.get
+    (m("rows").asInstanceOf[Long], m("retired").asInstanceOf[Long])
+  }
+
   /** [[writeFeed]] as a pass-through for `.transform` chains. */
   private def writeFeedFn(tag: String)(changes: DataFrame): DataFrame = {
     writeFeed(changes, tag); changes
@@ -1121,10 +763,9 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     // distinct: the sidecar is a key SET, and the COUNT arithmetic
     // (Σfile rows − Σdv rows) assumes one dv row per retired live
     // instance. The feed-derived victims are unique per key on a healthy
-    // snapshot; if a corrupt commit ever left duplicate live rows for a
-    // key, the feed's left_outer join would emit several victim rows and
-    // silently compound the corruption — dedupe defensively (the frame is
-    // O(statement), the extra exchange is noise).
+    // snapshot; duplicate live rows for a key would emit several victim
+    // rows, which the dedupe turns into a dv-rows ≠ retired-rows failure
+    // of the statement's invariant check instead of an over-subtraction.
     victims.distinct().withColumn(BucketCol, bucketExpr)
       .repartition(math.max(touchedCount, 1), col(BucketCol))
       .write.mode("overwrite").partitionBy(BucketCol).parquet(dvDir)

@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -222,9 +221,9 @@ private[graft] object ManifestRowLevelOps {
     * feed — so a key-moving `UPDATE t SET key = key + 1` is atomic: no
     * crash window or reader-visible intermediate version with rows at
     * both old and new keys (the two-commit shape this replaced had
-    * exactly that hole). Keys re-occupied by an insert/update survive
-    * (the anti-join keeps them out of the delete set; applyDelta would
-    * resolve the overlap the same way). */
+    * exactly that hole). Keys re-occupied by an insert/update survive:
+    * the statement resolves a key both upserted and deleted as an
+    * upsert. */
   private[sources] def applyStaged(spark: SparkSession, root: String,
       keyCol: String, orderCol: String, paths: Seq[String],
       dataSchema: StructType, idSchema: StructType,
@@ -259,46 +258,21 @@ private[graft] object ManifestRowLevelOps {
     val (kc, buckets) = ManifestSource.resolveKeyBuckets(root, Some(keyCol), None)
     val sink = new ManifestUpsertSink(root, kc, buckets,
       ManifestSource.resolvePartCol(root, None))
-    // a PURE DELETE on a mergeOnRead table takes the deletion-vector
-    // path — a predicate DELETE (`WHERE price < x`) is then a manifest
-    // edit + key sidecar like the key-equality shapes, never a bucket
-    // rewrite.
-    if (dataSchema.isEmpty && mergeOnRead) {
-      sink.deleteKeysMergeOnRead(delKeys, ManifestUpsertSink.AdHocBatch,
-        dvMaxRowsPerBucket)
-      return
+    // one statement, one commit, whatever it mixes: a pure DELETE ships
+    // a schema-less upsert frame (no row images), an upsert-only
+    // statement an empty delete set, and the sink's statement pipeline
+    // drops either side when its touched-bucket probe finds no row. A
+    // mergeOnRead table appends the row images and retires the old rows
+    // with one dv generation, so no statement class pays O(touched-bucket
+    // bytes); over-cap statements fall back to copy-on-write in the sink.
+    if (mergeOnRead)
+      sink.applyDeltaMergeOnRead(upserts, delKeys, orderCol,
+        ManifestUpsertSink.AdHocBatch, dvMaxRowsPerBucket)
+    else {
+      val ups = upserts.persist()
+      try sink.applyDelta(ups, delKeys, orderCol, ManifestUpsertSink.AdHocBatch)
+      finally { ups.unpersist(); () }
     }
-    // an UPSERT-ONLY statement (non-key-moving UPDATE, MERGE without
-    // DELETE branches) on a mergeOnRead table takes the merge-on-read
-    // UPSERT: new row images append as new files, a dv with the commit's
-    // sequence retires the old rows, every prior data file stays
-    // byte-identical — trickle updates cost O(changed rows), not
-    // O(touched bucket bytes). MIXED statements (MERGE with DELETE
-    // branches, key-moving UPDATEs) take the single-commit merge-on-read
-    // apply: the same append + one dv generation covering replaced ∪
-    // deleted ∪ moved-away old keys at one sequence — the atomicity
-    // contract spanning deletes at vacated keys holds because it is ONE
-    // commit, and no statement class pays O(touched-bucket bytes).
-    if (mergeOnRead) {
-      if (delKeys.isEmpty)
-        sink.upsertMergeOnRead(upserts, orderCol, ManifestUpsertSink.AdHocBatch,
-          dvMaxRowsPerBucket)
-      else
-        sink.applyDeltaMergeOnRead(upserts, delKeys, orderCol,
-          ManifestUpsertSink.AdHocBatch, dvMaxRowsPerBucket)
-      return
-    }
-    val ups = upserts.persist()
-    try {
-      // a key can be deleted-from AND re-occupied in one statement only
-      // via a key-changing update — the anti-join keeps re-occupied keys
-      // (a pure-DELETE delta ships a schema-less upsert frame: nothing to
-      // anti-join against, applyDelta handles it as deletes-only)
-      val dels =
-        if (dataSchema.isEmpty) delKeys
-        else delKeys.join(ups.select(keyCols.map(col): _*), keyCols, "left_anti")
-      sink.applyDelta(ups, dels, orderCol, ManifestUpsertSink.AdHocBatch)
-    } finally { ups.unpersist(); () }
   }
 
   /** Decode one staged file: (op, idRow, dataRow) records — UnsafeRows

@@ -298,9 +298,9 @@ final class ManifestSource extends TableProvider with DataSourceRegister
     * reduce each key to its LAST action by `orderCol` (a key deleted at
     * v2 and re-inserted at v5 must survive — naive apply-all-upserts-
     * then-all-deletes would kill it), then MERGE the live rows and
-    * DELETE the dead ones under paired replay-guarded batch ids
-    * (2·id / 2·id+1 — a crash between the two replays the upsert as a
-    * no-op and completes the delete, the same protocol as the
+    * DELETE the dead ones as ONE commit replay-guarded as batch id
+    * 2·id+1 (odd, so the guard stays monotone over mirrors written when
+    * the two committed as 2·id and 2·id+1 — the same protocol as the
     * materialized-view writer). The mirror keeps the order column like
     * any MERGE; `change` is consumed by the split. */
   private def applyChangesSink(parameters: Map[String, String]): Sink = {
@@ -319,8 +319,8 @@ final class ManifestSource extends TableProvider with DataSourceRegister
           parameters.get("keyCol"), parameters.get("buckets").map(_.toInt))
         val sink = new graft.sinks.ManifestUpsertSink(root, keyCol, buckets,
           ManifestSource.resolvePartCol(root, parameters.get("partCol")))
-        // several actions follow (emptiness probes + each verb's own
-        // jobs) — persist so the batch's lineage runs once
+        // several actions follow (one touched-bucket probe per side, the
+        // feed and data writes) — persist so the batch's lineage runs once
         val last = graft.sinks.JdbcUpsertSink
           .lastWriteWins(batch, keyCol, org.apache.spark.sql.functions.col(orderCol))
           .persist()
@@ -331,21 +331,14 @@ final class ManifestSource extends TableProvider with DataSourceRegister
             .select(keyCol.split(",").map(_.trim)
               .map(org.apache.spark.sql.functions.col).toSeq: _*)
           // a mergeOnRead MIRROR replicates with merge-on-read economics
-          // too: upserts append + sequence-stamped dv, deletes commit dv
-          // sidecars — O(changed rows) per micro-batch, the same routing
-          // as every other write surface (over-cap batches fall back to
-          // copy-on-write inside the verbs)
-          val mor = parameters.get("mergeOnRead").exists(_.toBoolean)
-          val cap = parameters.get("dvMaxRowsPerBucket").map(_.toLong)
-            .getOrElse(ManifestUpsertSink.DefaultDvMaxRowsPerBucket)
-          if (!live.isEmpty) {
-            if (mor) sink.upsertMergeOnRead(live, orderCol, 2 * batchId, cap)
-            else sink.upsertBatch(live, orderCol, 2 * batchId)
-          }
-          if (!dead.isEmpty) {
-            if (mor) sink.deleteKeysMergeOnRead(dead, 2 * batchId + 1, cap)
-            else sink.deleteKeys(dead, 2 * batchId + 1)
-          }
+          // too — O(changed rows) per micro-batch, the same routing as
+          // every other write surface (over-cap batches fall back to
+          // copy-on-write inside the sink)
+          if (parameters.get("mergeOnRead").exists(_.toBoolean))
+            sink.applyDeltaMergeOnRead(live, dead, orderCol, 2 * batchId + 1,
+              parameters.get("dvMaxRowsPerBucket").map(_.toLong)
+                .getOrElse(ManifestUpsertSink.DefaultDvMaxRowsPerBucket))
+          else sink.applyDelta(live, dead, orderCol, 2 * batchId + 1)
         } finally { last.unpersist(); () }
       }
       override def toString: String = "graft-manifest-apply-changes-sink"

@@ -232,8 +232,11 @@ object EventStream {
     * never a view rescan; groups whose running count hits zero are
     * DELETED from the MV (their source rows are gone), so MV snapshot ==
     * recompute-from-source exactly, including group death. The merge and
-    * the delete are two commits, replay-guarded as batch ids 2·id and
-    * 2·id+1 — a redelivered trigger id replays both as no-ops.
+    * the delete are ONE commit ([[graft.sinks.ManifestUpsertSink.applyDelta]]),
+    * so no reader or crash sees a half-applied trigger; it is
+    * replay-guarded as batch id 2·id+1 (the odd id keeps the guard
+    * monotone over views written when merge and delete committed as
+    * 2·id and 2·id+1) — a redelivered trigger id replays as a no-op.
     *
     * State cost: O(groups) in the stream's store (dead groups keep a
     * zero entry — the price of exact counts without a TTL), O(changed
@@ -257,16 +260,15 @@ object EventStream {
     maintained.writeStream
       .outputMode("update") // only the groups this trigger's changes touched
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        // persist: the closure takes several independent actions (the
-        // emptiness probes + the MERGE's and DELETE's own jobs) — without
-        // it each action re-runs the stateful aggregation pipeline
+        // persist: the statement takes several actions (one touched-
+        // bucket probe per side, the feed and data writes) — without it
+        // each action re-runs the stateful aggregation pipeline
         batch.persist()
         try {
           val live = batch.filter(col("n") > 0L)
             .select(col("grp"), col("total"), col("n")).withColumn("seq", lit(id))
           val dead = batch.filter(col("n") <= 0L).select(col("grp"))
-          if (!live.isEmpty) mvSink.upsertBatch(live, "seq", 2 * id)
-          if (!dead.isEmpty) mvSink.deleteKeys(dead, 2 * id + 1)
+          mvSink.applyDelta(live, dead, "seq", 2 * id + 1)
         } finally { batch.unpersist(); () }
       }
       .option("checkpointLocation", checkpoint)

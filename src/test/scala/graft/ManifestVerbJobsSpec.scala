@@ -1,0 +1,72 @@
+package graft
+
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sinks.ManifestUpsertSink
+
+/** Spark-job pins for the six row-level verbs: each verb runs once on a
+  * freshly seeded 4-bucket table (40 rows) and a SparkListener counts
+  * the jobs it starts. The pins are the counts of the verbs as they
+  * stand, so a refactor of the write path cannot add an action
+  * unnoticed; a change that removes jobs lowers the pins with it. */
+class ManifestVerbJobsSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+
+  private val Pins = Map(
+    "upsertBatch" -> 10,
+    "deleteKeys" -> 9,
+    "applyDelta" -> 20,
+    "upsertMergeOnRead" -> 11,
+    "deleteKeysMergeOnRead" -> 8,
+    "applyDeltaMergeOnRead" -> 19)
+
+  private def seeded(): ManifestUpsertSink = {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_verb_jobs_").toString
+    val sink = new ManifestUpsertSink(root, "id", 4)
+    sink.upsertBatch((1 to 40).map(i => (i.toLong, s"p$i", 1L))
+      .toDF("id", "p", "seq"), "seq", 0L)
+    sink
+  }
+
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try { body; TestListenerBus.drain(sc); jobs.get }
+    finally sc.removeSparkListener(listener)
+  }
+
+  test("each row-level verb runs its pinned number of Spark jobs") {
+    import spark.implicits._
+    // the same statement shapes on every table: three updates and two
+    // inserts, three deletes of live keys, and a mixed statement
+    def ups = Seq((1L, "u1", 2L), (2L, "u2", 2L), (3L, "u3", 2L),
+      (41L, "n41", 2L), (42L, "n42", 2L)).toDF("id", "p", "seq")
+    def dels = Seq(5L, 6L, 7L).toDF("id")
+    def mixedUps = Seq((1L, "m1", 2L), (43L, "n43", 2L)).toDF("id", "p", "seq")
+    def mixedDels = Seq(8L, 9L).toDF("id")
+    val verbs: Seq[(String, ManifestUpsertSink => Unit)] = Seq(
+      "upsertBatch" -> (_.upsertBatch(ups, "seq", 1L)),
+      "deleteKeys" -> (_.deleteKeys(dels, 1L)),
+      "applyDelta" -> (_.applyDelta(mixedUps, mixedDels, "seq", 1L)),
+      "upsertMergeOnRead" -> (_.upsertMergeOnRead(ups, "seq", 1L)),
+      "deleteKeysMergeOnRead" -> (_.deleteKeysMergeOnRead(dels, 1L)),
+      "applyDeltaMergeOnRead" -> (_.applyDeltaMergeOnRead(mixedUps, mixedDels, "seq", 1L)))
+    val counts = verbs.map { case (name, run) =>
+      val sink = seeded()
+      name -> jobsOf(run(sink))
+    }.toMap
+    info(s"jobs per verb: $counts")
+    assert(counts == Pins, s"verb job counts moved: got $counts, pinned $Pins")
+  }
+}
