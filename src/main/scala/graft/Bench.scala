@@ -130,21 +130,24 @@ object Bench {
       .mkString("{", ",", "}")
     def tierSum(prefix: String => Boolean): Double =
       results.collect { case (k, v, _) if v > 0 && prefix(k) => v }.sum
-    val lakeSec = tierSum(k => k >= "q294" && k <= "q335z")
-    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"n_errors":${errs.size}%d,"errors":$errNames%s,"lake_sec":$lakeSec%.3f,"slowest":$slowest%s,"full_json":"target/bench.json","cpus":$cpus%s,"sf":"$sfDir%s"}"""
+    // the lake tier by numeric query id: a string range would also admit
+    // two-digit names such as q29_orderby_limit or q31_events_hourly
+    val lakeSec = tierSum(k => k.startsWith("q") &&
+      k.drop(1).takeWhile(_.isDigit).toIntOption.exists(id => id >= 294 && id <= 335))
+    val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n":${results.size}%d,"n_errors":${errs.size}%d,"errors":$errNames%s,"lake_sec":$lakeSec%.3f,"slowest":$slowest%s,"full_json":"target/bench.json","cpus":"${jsonEsc(cpus)}%s","sf":"$sfDir%s"}"""
     // stdout insurance (r07: a clean run still archived as `parsed: null`
     // because the driver keeps only a short stdout tail and the timing map
     // prints first) — the full JSON always lands on disk too, and per-cpus
     // so a c8 scaling run no longer overwrites the c32 artifact
-    try {
-      val out = java.nio.file.Paths.get("target/bench.json")
-      java.nio.file.Files.createDirectories(out.getParent)
-      java.nio.file.Files.writeString(out, line + "\n")
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"target/bench_c$cpus.json"), line + "\n")
-      System.err.println(s"[bench] json also written to ${out.toAbsolutePath} and target/bench_c$cpus.json")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write target/bench.json: $e")
+    for (name <- Seq("target/bench.json", s"target/bench_c$cpus.json")) {
+      val out = java.nio.file.Paths.get(name)
+      try {
+        java.nio.file.Files.createDirectories(out.getParent)
+        java.nio.file.Files.writeString(out, line + "\n")
+        System.err.println(s"[bench] json also written to ${out.toAbsolutePath}")
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $name: $e")
+      }
     }
     println(compact)
     spark.stop()

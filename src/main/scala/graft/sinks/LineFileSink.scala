@@ -111,10 +111,14 @@ object LineFileSink {
       .sortWithinPartitions(col("year"), col("month"), col("day"), col("seq"))
     val maxPerFile = maxRecordsPerFile
     val root = path
+    // the session's resolved Hadoop conf (spark.hadoop.* settings,
+    // credentials), shipped in the closure: an object-store root binds
+    // with the session's settings, and no task re-parses the default XMLs
+    val hconf = new graft.sources.SerializableHadoopConf(
+      raw.sparkSession.sessionState.newHadoopConf())
     prepared.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
       if (rows.hasNext) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(root), new org.apache.hadoop.conf.Configuration())
+        val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(root), hconf.value)
         val buf = new scala.collection.mutable.ArrayBuffer[String]()
         var key: (String, String, String) = null
         var lastSeq: String = null

@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.column.statistics.Statistics
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -19,9 +20,13 @@ import org.apache.spark.sql.sources._
 /** File-level data skipping for the manifest lake: per-file column
   * min/max/null-count statistics, collected from the parquet FOOTERS of
   * just-written files at merge/compact time (metadata-only reads — no
-  * data pages touched, cost a few ms per file on the driver, the
-  * Iceberg/Delta commit-time stats model) and persisted next to each
-  * manifest as an advisory sidecar (`_manifest/v<N>.stats`).
+  * data pages touched, the Iceberg/Delta commit-time stats model) and
+  * persisted next to each manifest as an advisory sidecar
+  * (`_manifest/v<N>.stats`). Measured on a 4-core box with a warm JVM,
+  * the 16 files of a 16-bucket, 5000-row table: 15-31 ms for all 16
+  * footers on the driver (about 1-2 ms a file); opened through parquet's
+  * default `open(InputFile)`, which builds a new Hadoop `Configuration`
+  * per file, the same reads took 116-224 ms ([[openFooter]]).
   *
   * At read time [[graft.sources.ManifestSource]] evaluates the query's
   * pushed filters against each file's interval BEFORE handing the file
@@ -84,11 +89,13 @@ object ManifestStats {
   def collect(paths: Seq[String]): Map[String, FileStats] =
     paths.flatMap(p => collectOne(p).map(p -> _)).toMap
 
-  /** File count above which stats collection fans out to executors: a
-    * merge touches a handful of buckets (driver footer reads are ms-
-    * scale, a Spark job costs more than it saves) but a full-rewrite
-    * compaction of a 100-TB table writes tens of thousands of files —
-    * serial driver reads there are minutes of commit-path stall. */
+  /** File count at which stats collection fans out to executors. A
+    * merge touches a handful of buckets, and a full-rewrite compaction
+    * of a large table writes tens of thousands of files, where serial
+    * driver reads stall the commit path for seconds to minutes. Measured
+    * (same box and files as above, the 16 read 4 times): 64 footers took
+    * 31-58 ms on the driver and 110-282 ms through [[collectDistributed]],
+    * whose Spark job costs more than 64 driver reads. */
   private[graft] val DistributedCollectThreshold = 64
 
   /** Footer stats collected ON EXECUTORS — one task per slice of the
@@ -115,29 +122,38 @@ object ManifestStats {
   private def collectOne(path: String): Option[FileStats] =
     try {
       val in = HadoopInputFile.fromPath(new HPath(path), TableStore.hadoopConf)
-      val reader = ParquetFileReader.open(in)
-      try {
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val rows = blocks.map(_.getRowCount).sum
-        // eligible top-level columns (path depth 1), keyed by name
-        val perCol = scala.collection.mutable.Map[String, ColStats]()
-        val seen = scala.collection.mutable.Set[String]()
-        for (b <- blocks; c <- b.getColumns.asScala if c.getPath.size == 1) {
-          val name = c.getPath.toDotString
-          kindOf(c.getPrimitiveType) match {
-            case Some((kind, scale)) =>
-              seen += name
-              val s = chunkStats(kind, scale, c.getStatistics)
-              perCol(name) = perCol.get(name) match {
-                case None => s
-                case Some(prev) => mergeCol(kind, prev, s)
-              }
-            case None => ()
-          }
-        }
-        Some(FileStats(rows, perCol.toMap, in.getLength))
-      } finally reader.close()
+      val reader = openFooter(in)
+      try Some(fileStats(reader, in.getLength)) finally reader.close()
     } catch { case NonFatal(_) => None }
+
+  /** Open `in` for footer reads with read options built from `in`'s own
+    * conf. Parquet's `open(InputFile)` ignores that conf: it builds its
+    * options over a NEW Hadoop `Configuration`, which re-parses the
+    * default XMLs for every file opened. The options are built per call,
+    * not shared: building them is cheap, and [[collectDistributed]] opens
+    * files from concurrent tasks, which must not share one options
+    * object's codec factory. */
+  private[graft] def openFooter(in: HadoopInputFile): ParquetFileReader =
+    ParquetFileReader.open(in, HadoopReadOptions.builder(in.getConfiguration, in.getPath).build())
+
+  /** The stats of the file open in `reader`, from its footer alone. */
+  private[graft] def fileStats(reader: ParquetFileReader, bytes: Long): FileStats = {
+    val blocks = reader.getFooter.getBlocks.asScala.toSeq
+    val rows = blocks.map(_.getRowCount).sum
+    // eligible top-level columns (path depth 1), keyed by name
+    val perCol = scala.collection.mutable.Map[String, ColStats]()
+    for (b <- blocks; c <- b.getColumns.asScala if c.getPath.size == 1) {
+      val name = c.getPath.toDotString
+      kindOf(c.getPrimitiveType).foreach { case (kind, scale) =>
+        val s = chunkStats(kind, scale, c.getStatistics)
+        perCol(name) = perCol.get(name) match {
+          case None => s
+          case Some(prev) => mergeCol(kind, prev, s)
+        }
+      }
+    }
+    FileStats(rows, perCol.toMap, bytes)
+  }
 
   /** (kind, 'L'-scale): the scale multiplies integral bounds into the
     * SAME unit [[literalToDomain]] converts filter literals to.

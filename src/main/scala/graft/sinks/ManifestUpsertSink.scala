@@ -455,12 +455,13 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
         .sortWithinPartitions((partBy ++ cols).map(col): _*)
         .write.mode("overwrite")
         // ADAPTIVE bloom sizing (parquet-mr 1.14+): without it every
-        // bloom is allocated at parquet.bloom.filter.max.bytes (1 MB)
+        // bloom is allocated at parquet.bloom.filter.max.bytes (1 MiB)
         // regardless of the file's actual ndv, so a trickle commit's
         // one-bucket file was ~97% bloom bytes. Adaptive sizes the
         // filter to the observed distinct count — same false-positive
-        // target, orders of magnitude fewer bytes on small files,
-        // unchanged on big ones.
+        // target; a few-key file's bloom is the smallest default
+        // candidate, 64 KiB (pinned by ManifestFooterSpec), and big
+        // files are unchanged.
         .option("parquet.bloom.filter.adaptive.enabled", "true")) { (w, k) =>
       w.option(s"parquet.bloom.filter.enabled#$k", "true")
     }.partitionBy(partBy: _*).parquet(dataDir)
@@ -766,8 +767,14 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     // snapshot; duplicate live rows for a key would emit several victim
     // rows, which the dedupe turns into a dv-rows ≠ retired-rows failure
     // of the statement's invariant check instead of an over-subtraction.
-    victims.distinct().withColumn(BucketCol, bucketExpr)
+    // ONE exchange: the bucket is a function of the key, so rows equal
+    // on (keys, bucket) share a bucket partition, and the hash
+    // repartition on the bucket already meets the distinct's clustering
+    // — deduplicating before it would plan a second shuffle (one more
+    // Spark job per merge-on-read statement) for the same rows.
+    victims.withColumn(BucketCol, bucketExpr)
       .repartition(math.max(touchedCount, 1), col(BucketCol))
+      .distinct()
       .write.mode("overwrite").partitionBy(BucketCol).parquet(dvDir)
     val dvFiles = listParquet(dvDir, store)
     val dvStats = ManifestStats.collectAuto(dvFiles.map(_.path))

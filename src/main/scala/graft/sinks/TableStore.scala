@@ -167,9 +167,13 @@ object TableStore {
     * `FileSystem.get` additionally caches the FS per scheme. */
   @transient private lazy val sharedConf = new Configuration()
 
-  /** The shared conf, for driver-side metadata reads that need a Hadoop
+  /** The shared conf, for metadata reads that need a Hadoop
     * `Configuration` (parquet footer stats) without re-parsing the
-    * default XMLs per call. */
+    * default XMLs per call. Passing it in a `HadoopInputFile` is not
+    * enough: parquet's `ParquetFileReader.open(InputFile)` ignores the
+    * InputFile's conf and builds its read options over a new one, so
+    * footer readers must build their options from this conf as well
+    * ([[ManifestStats.openFooter]]). */
   private[graft] def hadoopConf: Configuration = sharedConf
 
   /** Hadoop `FileSystem` implementation — one code path for `file:`,

@@ -21,9 +21,9 @@ class ManifestVerbJobsSpec extends AnyFunSuite {
     "upsertBatch" -> 10,
     "deleteKeys" -> 9,
     "applyDelta" -> 20,
-    "upsertMergeOnRead" -> 11,
-    "deleteKeysMergeOnRead" -> 8,
-    "applyDeltaMergeOnRead" -> 19)
+    "upsertMergeOnRead" -> 10,
+    "deleteKeysMergeOnRead" -> 7,
+    "applyDeltaMergeOnRead" -> 18)
 
   private def seeded(): ManifestUpsertSink = {
     import spark.implicits._
