@@ -31,7 +31,10 @@ object Tables {
     * Applied once at SparkSession build (Bench/Verify/Engine/specs) — NOT
     * per table load: a `conf.set` inside a loader is a hidden global write,
     * order-dependent under concurrent plan building and surprising to any
-    * caller reading other nanos parquet. */
+    * caller reading other nanos parquet. The `spark.hadoop.fs.file.impl`
+    * entry reaches every Hadoop conf the session hands out; Hadoop caches
+    * FileSystems per scheme, not per conf, so graft's own shared confs
+    * name the same class (`NioLocalFileSystem.wire`). */
   val sessionConf: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true",
       // AQE pinned ON (it is the Spark 3.2+ default, but the manifest
@@ -46,7 +49,14 @@ object Tables {
       // with checksums) — kills the per-trigger walCommit/commitOffsets
       // tax; non-local roots fall back to stock Spark inside the class
       "spark.sql.streaming.checkpointFileManagerClass" ->
-        "graft.streaming.NioCheckpointFileManager")
+        "graft.streaming.NioCheckpointFileManager",
+      // local DATA writes (every parquet/text part file, its .crc, and
+      // each directory the commit protocol makes) set permission bits
+      // through java.nio instead of forking one `chmod` apiece — Hadoop's
+      // behaviour without libhadoop; checksums stay on, and non-local
+      // schemes never resolve this key
+      "spark.hadoop." + graft.sinks.NioLocalFileSystem.ConfKey ->
+        graft.sinks.NioLocalFileSystem.ClassName)
 
   /** Exposes BOTH timestamp representations so every query picks the
     * right precision:

@@ -2318,15 +2318,31 @@ object ManifestUpsertSink {
     else {
       val keyCols = splitKeyCols(m.keyCol.getOrElse(throw new IllegalStateException(
         "manifest carries deletion vectors but no keyCol header — corrupt manifest")))
-      // mergeSchema: dv files span key-rename vintages; the rename fold
-      // coalesces old and new spellings exactly as it does for data files
-      val dvKeys = applyRenames(
-        df.sparkSession.read.option("mergeSchema", "true")
-          .parquet(dvs.map(_.path): _*), m.renames)
-        .select(keyCols.map(col): _*)
+      val dvKeys = readDvKeys(df.sparkSession, m, keyCols, dvs.map(_.path))
       df.join(broadcast(dvKeys), keyCols, "left_anti")
     }
   }
+
+  /** The key tuples of the dv files `paths` under `m`, in LOGICAL key
+    * names. A dv file spells the key as it was named when the dv was
+    * written, and no commit clears the rename mapping while a dv of an
+    * older spelling stays live: a full compaction clears the mapping
+    * together with every dv it folds, one that rebases onto a winner
+    * adopts the winner's mapping along with the winner's dvs
+    * ([[commitRebasing]]), and epoch rewrites commit no dvs. So with no
+    * mapping every live dv spells the current key, and a stamped
+    * manifest reads the files under the stamp's key types — no footer
+    * walk, and so no schema-merge Spark job. Otherwise mergeSchema spans
+    * the key-rename vintages and the rename fold coalesces old and new
+    * spellings exactly as it does for data files. */
+  private def readDvKeys(spark: SparkSession, m: Manifest, keyCols: Seq[String],
+      paths: Seq[String]): DataFrame =
+    m.physSchema.filter(_ => m.renames.isEmpty).map(StructType.fromDDL) match {
+      case Some(stamp) => spark.read.schema(StructType(keyCols.map(stamp(_)))).parquet(paths: _*)
+      case None =>
+        applyRenames(spark.read.option("mergeSchema", "true").parquet(paths: _*), m.renames)
+          .select(keyCols.map(col): _*)
+    }
 
   /** Whether the dv SEQUENCE test actually bites for this read: a dv
     * masks a key only in files OLDER than it (`file.seq < dv.seq`), so
@@ -2375,9 +2391,7 @@ object ManifestUpsertSink {
           .withColumn(FseqCol, lit(s))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       val dvKeys = dvs.groupBy(_.seq).toSeq.sortBy(_._1).map { case (s, ds) =>
-        applyRenames(spark.read.option("mergeSchema", "true")
-            .parquet(ds.map(_.path): _*), m.renames)
-          .select(keyCols.map(col): _*).withColumn("__dvseq", lit(s))
+        readDvKeys(spark, m, keyCols, ds.map(_.path)).withColumn("__dvseq", lit(s))
       }.reduce(_.unionByName(_))
       val cond = keyCols.map(k => data(k) === dvKeys(k)).reduce(_ && _) &&
         dvKeys("__dvseq") > data(FseqCol)

@@ -15,6 +15,14 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
   * Spark's parquet reader/writer (which speaks Hadoop paths natively);
   * this trait carries only the manifest-log control plane.
   *
+  * Shell-outs: without libhadoop, Hadoop's stock local FS forks a
+  * process for permission bits — `chmod` on every file and directory it
+  * creates, `ls`/`stat` when a listing's permissions are read. The nio
+  * store avoids Hadoop altogether; Spark's data-plane writes and the
+  * Hadoop store's `file:` roots resolve `file:` to
+  * [[NioLocalFileSystem]] (wired in `Tables.sessionConf` and in
+  * `TableStore.hadoopConf`), which sets modes with one syscall instead.
+  *
   * Dispatch is by path scheme ([[TableStore.forPath]]): a scheme-less
   * `/tmp/...` root gets the nio implementation (no Hadoop overhead — a
   * `RawLocalFileSystem` list shells out per entry for permission bits),
@@ -163,9 +171,13 @@ object TableStore {
   /** One shared read-only `Configuration` for every Hadoop store:
     * construction re-parses the default XMLs (~0.25 s), and stores are
     * created per call on the read paths (`forPath` in snapshotFiles /
-    * the DSv2 connector). Never mutated, so sharing is safe;
-    * `FileSystem.get` additionally caches the FS per scheme. */
-  @transient private lazy val sharedConf = new Configuration()
+    * the DSv2 connector). Never mutated after construction, so sharing
+    * is safe; `FileSystem.get` additionally caches the FS per scheme —
+    * and by scheme only, not by conf, so this conf names the same
+    * `file:` class the session does ([[NioLocalFileSystem.wire]]): the
+    * footer reader can be a JVM's first `file:` caller, and a stock
+    * instance cached from here would serve every later session write. */
+  @transient private lazy val sharedConf = NioLocalFileSystem.wire(new Configuration())
 
   /** The shared conf, for metadata reads that need a Hadoop
     * `Configuration` (parquet footer stats) without re-parsing the

@@ -78,8 +78,11 @@ object RecordsSource {
     * latestOffset lists once per trigger — per-trigger construction was
     * the single largest line in the sustained-mode streaming bench's
     * latestOffset phase. The conf is read-only here, so sharing is safe;
-    * FileSystem.get additionally caches the FS instance per scheme. */
-  private[sources] lazy val listingConf = new Configuration()
+    * FileSystem.get additionally caches the FS instance per scheme (not
+    * per conf — hence the same `file:` class as the session's,
+    * [[graft.sinks.NioLocalFileSystem.wire]]). */
+  private[sources] lazy val listingConf =
+    graft.sinks.NioLocalFileSystem.wire(new Configuration())
 
   /** List every committed chunk under `root` (recursive; dot-temp files are
     * never visible — the writer renames into place). Driver-side listing of

@@ -13,6 +13,7 @@ object DvScanProbe {
       .appName("dv-scan-probe").master(s"local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
+      .config(graft.Tables.sessionConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.sinks.ManifestUpsertSink

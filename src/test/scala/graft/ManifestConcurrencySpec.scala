@@ -165,6 +165,47 @@ class ManifestConcurrencySpec extends AnyFunSuite {
     }
   }
 
+  test("a live dv never spells a retired key name once the rename mapping clears") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_occ_dvkey_").toString
+    val seed = new ManifestUpsertSink(root, "id", buckets = 4)
+    seed.upsertBatch((1L to 20L).map(i => (i, s"p$i", 0L)).toDF("id", "p", "seq"), "seq", 0L)
+    val kSame = sameBucketKey(3L)
+    seed.deleteKeysMergeOnRead(Seq(3L).toDF("id"), 1L) // dv file spells `id`
+    seed.renameColumn(spark, "id", "key")
+    def spellings(m: ManifestUpsertSink.Manifest): Seq[Set[String]] =
+      m.dvs.map(d => spark.read.parquet(d.path).columns.toSet)
+    def liveKeys(): Set[Long] = ManifestUpsertSink.read(spark, root)
+      .select("key").as[Long].collect().toSet
+    // a full compaction (which clears the mapping) racing a MoR delete in
+    // the old dv's bucket: the rebase carries that bucket's dvs — the
+    // `id`-spelled one included — so it must carry the mapping as well
+    var fired = false
+    val compactor = new ManifestUpsertSink(root, "key", 4) {
+      override protected def beforeCommit(attemptVersion: Long): Unit =
+        if (!fired) {
+          fired = true
+          new ManifestUpsertSink(root, "key", 4).deleteKeysMergeOnRead(Seq(kSame).toDF("key"), 2L)
+        }
+    }
+    compactor.compact(spark)
+    val raced = ManifestUpsertSink.latestManifest(root).get
+    assert(spellings(raced).exists(_.contains("id")),
+      s"the race keeps an old-spelling dv live: ${spellings(raced)}")
+    assert(raced.renames == Seq("id" -> "key"), "and with it the mapping that reads it")
+    assert(liveKeys() == (1L to 20L).toSet -- Set(3L, kSame))
+    // an unraced full compaction clears the mapping and every dv at once
+    val clean = new ManifestUpsertSink(root, "key", 4)
+    clean.compact(spark)
+    val cleared = ManifestUpsertSink.latestManifest(root).get
+    assert(cleared.renames.isEmpty && cleared.dvs.isEmpty)
+    // a dv written after the clear spells the live key and reads through the stamp
+    clean.deleteKeysMergeOnRead(Seq(5L).toDF("key"), 3L)
+    val after = ManifestUpsertSink.latestManifest(root).get
+    assert(after.renames.isEmpty && spellings(after).forall(_ == Set("key")), spellings(after))
+    assert(liveKeys() == (1L to 20L).toSet -- Set(3L, kSame, 5L))
+  }
+
   test("merge loses to a concurrent compactor: data-identical rewrite is never a conflict") {
     import spark.implicits._
     val (k1, _) = disjointKeys()

@@ -329,7 +329,8 @@ class ManifestSkippingSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_statsd_").toString
     (1L to 5000L).map(i => (i, i * 0.5, s"s$i", if (i % 7 == 0) None else Some(i)))
       .toDF("k", "v", "s", "opt")
-      .repartition(80).write.mode("overwrite").parquet(dir)
+      .repartition(ManifestStats.DistributedCollectThreshold + 16)
+      .write.mode("overwrite").parquet(dir)
     val paths = new java.io.File(dir).listFiles()
       .map(_.toString).filter(_.endsWith(".parquet")).toSeq.sorted
     assert(paths.size >= ManifestStats.DistributedCollectThreshold,

@@ -13,7 +13,9 @@ import graft.sinks.ManifestUpsertSink
   * freshly seeded 4-bucket table (40 rows) and a SparkListener counts
   * the jobs it starts. The pins are the counts of the verbs as they
   * stand, so a refactor of the write path cannot add an action
-  * unnoticed; a change that removes jobs lowers the pins with it. */
+  * unnoticed; a change that removes jobs lowers the pins with it. The
+  * six run on dv-free tables; one more pin covers a merge-on-read upsert
+  * on a table that already holds a live deletion vector. */
 class ManifestVerbJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -68,5 +70,20 @@ class ManifestVerbJobsSpec extends AnyFunSuite {
     }.toMap
     info(s"jobs per verb: $counts")
     assert(counts == Pins, s"verb job counts moved: got $counts, pinned $Pins")
+  }
+
+  test("a MoR upsert over a live dv reads the dv keys under the stamp, without a schema-merge job") {
+    import spark.implicits._
+    val sink = seeded()
+    sink.deleteKeysMergeOnRead(Seq(5L, 6L, 7L).toDF("id"), 1L)
+    // the upserts land in the dv'd buckets (5 and 6 come back to life)
+    val ups = Seq((5L, "r5", 2L), (6L, "r6", 2L), (8L, "u8", 2L), (43L, "n43", 2L))
+      .toDF("id", "p", "seq")
+    val jobs = jobsOf(sink.upsertMergeOnRead(ups, "seq", 2L))
+    // 12 while the dv files were read with mergeSchema: its footer
+    // union ran as a Spark job of its own on every such statement
+    assert(jobs == 11, s"MoR upsert over a live dv ran $jobs jobs, pinned 11")
+    assert(sink.read(spark).select("id").as[Long].collect().toSet ==
+      (1L to 40L).toSet - 7L + 43L)
   }
 }
