@@ -1,5 +1,7 @@
 package graft.sinks
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -231,9 +233,15 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     *
     *  1. Guards, once: replay (`batchId`), the committed bucket/key/
     *     partition layout, retired column names in the upserts.
-    *  2. Classify, once: the upserts' LWW window; one touched-bucket
-    *     collect per present side, which also refuses null keys; one
-    *     `readLogical` of the touched buckets; one combined change feed
+    *  2. Classify each present side once ([[classify]]): the upserts'
+    *     LWW frame, the delete keys minus the upserted ones, each with
+    *     its bucket column. A side whose plan estimate fits the
+    *     broadcast threshold is collected once in one partition (no
+    *     exchange) and re-read as a driver-local relation by every later
+    *     plan; a larger side stays lazy behind one touched-bucket
+    *     collect. Either way the touched set comes back and null keys
+    *     are refused before anything is written. Then one `readLogical`
+    *     of the touched buckets and one combined change feed
     *     — upserts classify inserted/updated against the current rows,
     *     deletes record only keys that EXIST, with BEFORE/AFTER images
     *     (the Delta CDF contract). The feed is staged OUTSIDE `_changes/`
@@ -246,11 +254,14 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     *  3. Apply, COPY-ON-WRITE (`morCap = None`): each touched bucket's
     *     survivors — current rows minus replaced and deleted keys — union
     *     the new row images and replace the bucket's files; the rewrite
-    *     read-folds and so materializes the bucket's dvs. Or
-    *     MERGE-ON-READ (`morCap = Some(cap)`): the new row images APPEND
-    *     and one dv generation lists every retired LIVE instance (the
-    *     feed's non-`inserted` keys, read back from the stage), so prior
-    *     data files stay byte-identical. Soundness comes from
+    *     read-folds and so materializes the bucket's dvs, and, being
+    *     table-sized, keeps its rebalance. Or MERGE-ON-READ
+    *     (`morCap = Some(cap)`): the new row images APPEND and one dv
+    *     generation lists every retired LIVE instance (the feed's
+    *     non-`inserted` keys, read back from the stage), so prior data
+    *     files stay byte-identical. A driver-local statement appends its
+    *     one partition as is and derives the dv in one partition, with no
+    *     shuffle on the batch side. Soundness comes from
     *     commit-sequence provenance: the read fold masks a dv'd key only
     *     in files with `file.seq < dv.seq`, so the replacement row
     *     written at the dv's own sequence survives. The dv must hold
@@ -272,26 +283,35 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     val spark = upserts.orElse(deletes).get.sparkSession
     val version = cur.map(_.version + 1).getOrElse(0L)
     val tag = newTag()
-    // probed on the RAW batch keys: LWW never changes the key set, and
-    // pre-window probing skips a full sort shuffle of the batch
-    val touchedUps = upserts.fold(Set.empty[Long])(b => collectTouchedRequireKeys(
-      b.select(keyColumns: _*).withColumn(BucketCol, bucketExpr)))
-    // deliberately NOT persisted, though three actions read it: MEASURED
-    // at the bench's 5k-row micro-batches, a persist made a 10-commit
-    // merge loop 16 s → 52-67 s. A caller merging truly large batches
-    // can persist BEFORE handing the frame over. A side that touched no
-    // bucket holds no row and drops out here.
-    val ups = upserts.filter(_ => touchedUps.nonEmpty).map(b =>
-      JdbcUpsertSink.lastWriteWins(b, keyCol, col(orderCol)).withColumn(BucketCol, bucketExpr))
+    // A lazy side is deliberately NOT persisted, though three plans read
+    // it: MEASURED at the bench's 5k-row micro-batches, a persist made a
+    // 10-commit merge loop 16 s → 52-67 s; a caller merging truly large
+    // batches can persist before handing the frame over. A side small
+    // enough to broadcast ([[classify]]) is collected once instead and
+    // re-read as a local relation: left lazy, its LWW window re-plans as a
+    // shuffle in the feed write and twice in the survivor write, an AQE
+    // job each. MEASURED on 4 cores: a 5-row copy-on-write upsert 10 → 6
+    // Spark jobs, merge-on-read 10 → 5, a mixed statement 20 → 9
+    // (ManifestVerbJobsSpec), and lake_rw's paired throughput ×1.39. A
+    // side that touched no bucket holds no row and drops out here.
+    val upSide = upserts.flatMap(b => classify(b,
+      JdbcUpsertSink.lastWriteWins(_, keyCol, col(orderCol)).withColumn(BucketCol, bucketExpr),
+      // probed on the RAW batch keys: LWW never changes the key set, and
+      // pre-window probing skips a full sort shuffle of the batch
+      probe = Some(b.select(keyColumns: _*).withColumn(BucketCol, bucketExpr))))
+    val ups = upSide.map(_.rows)
     // deletes of keys re-occupied by an upsert resolve as upserts
-    val keyedDel = deletes.map { d =>
+    val delSide = deletes.flatMap(classify(_, { d =>
       val keys = d.select(keyColumns: _*).distinct()
       ups.fold(keys)(u => keys.join(u.select(keyColumns: _*), keyCols, "left_anti"))
         .withColumn(BucketCol, bucketExpr)
-    }
-    val touchedDel = keyedDel.fold(Set.empty[Long])(collectTouchedRequireKeys)
-    val dels = keyedDel.filter(_ => touchedDel.nonEmpty)
-    val touched = touchedUps ++ touchedDel
+    }))
+    val dels = delSide.map(_.rows)
+    val touchedUps = upSide.fold(Set.empty[Long])(_.touched)
+    val touched = touchedUps ++ delSide.fold(Set.empty[Long])(_.touched)
+    // every present side on the driver: the statement's retired keys are
+    // bounded by its batch, so the dv sidecar derives in one partition too
+    val local = (upSide ++ delSide).forall(_.local)
     // current rows of the touched buckets — the one table-side read the
     // feed and the survivors share
     val current: Option[DataFrame] = cur.flatMap { m =>
@@ -349,7 +369,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
             beforeDvDerive(stage)
             writeDvSidecar(spark.read.schema(feed.schema).parquet(stage)
               .filter(col("change") =!= "inserted").select(keyColumns: _*),
-              version, tag, touched.size)
+              version, tag, touched.size, local)
           }
         def abandon(): Unit = { deleteTree(store, s"$dataDir-dv"); dropStage() }
         val dvRows = dvs.map(_.rows).sum
@@ -371,7 +391,9 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
           abandon()
           return statement(upserts, deletes, orderCol, batchId, morCap = None)
         }
-        ups.foreach(writeData(_, dataDir))
+        // a driver-local side is already one partition: appended as is,
+        // without the rebalance exchange
+        upSide.foreach(s => writeData(s.rows, dataDir, relayout = !s.local))
         (changed, if (ups.isEmpty) Nil else listParquet(dataDir, store),
           ups.fold(new StructType())(_.schema), dvs)
     }
@@ -759,7 +781,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * checks and metadata-only COUNT stay driver arithmetic. A victimless
     * statement leaves no dir behind. */
   private def writeDvSidecar(victims: DataFrame, version: Long, tag: String,
-      touchedCount: Int): Seq[DvEntry] = {
+      touchedCount: Int, local: Boolean): Seq[DvEntry] = {
     val dvDir = s"$root/data/v$version-$tag-dv"
     // distinct: the sidecar is a key SET, and the COUNT arithmetic
     // (Σfile rows − Σdv rows) assumes one dv row per retired live
@@ -771,9 +793,11 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     // on (keys, bucket) share a bucket partition, and the hash
     // repartition on the bucket already meets the distinct's clustering
     // — deduplicating before it would plan a second shuffle (one more
-    // Spark job per merge-on-read statement) for the same rows.
-    victims.withColumn(BucketCol, bucketExpr)
-      .repartition(math.max(touchedCount, 1), col(BucketCol))
+    // Spark job per merge-on-read statement) for the same rows. A
+    // `local` statement's victims are bounded by its driver-sized batch:
+    // one partition, which the distinct needs no exchange for.
+    val keyed = victims.withColumn(BucketCol, bucketExpr)
+    (if (local) keyed.coalesce(1) else keyed.repartition(math.max(touchedCount, 1), col(BucketCol)))
       .distinct()
       .write.mode("overwrite").partitionBy(BucketCol).parquet(dvDir)
     val dvFiles = listParquet(dvDir, store)
@@ -798,11 +822,48 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     val rows = keyed.select(col(BucketCol),
         keyCols.map(c => col(c).isNull).reduce(_ || _).as("nullkey"))
       .distinct().collect()
-    require(!rows.exists(_.getBoolean(1)),
+    requireNonNullKeys(rows.exists(_.getBoolean(1)))
+    rows.map(_.getLong(0)).toSet
+  }
+
+  private def requireNonNullKeys(nullKey: Boolean): Unit =
+    require(!nullKey,
       s"batch carries a NULL key component ($keyCol) — the lake key is " +
         "non-nullable by contract (it is the merge/bucket/row identity); " +
         "filter or coalesce null keys before writing")
-    rows.map(_.getLong(0)).toSet
+
+  /** One classified side of a statement: its rows with the bucket column,
+    * the buckets they touch, and whether the rows sit on the driver. */
+  private final case class Side(rows: DataFrame, touched: Set[Long], local: Boolean)
+
+  /** Classify one statement side, `frame(in)`, once; None when it touches
+    * no bucket. A side whose plan estimate fits
+    * `spark.sql.autoBroadcastJoinThreshold` (the size Spark already
+    * collects to the driver to broadcast; -1 turns this off) runs in ONE
+    * partition — `coalesce(1)` reports a single partition, so the LWW
+    * window and the distinct plan with no exchange — and is collected
+    * once: the rows give the touched set and the null-key refusal, and
+    * re-enter as a driver-local relation that every later plan of the
+    * statement reads. Any other side stays a lazy frame whose touched
+    * buckets come from the distinct (bucket, null-key) collect of
+    * `probe`, the frame itself by default. */
+  private def classify(in: DataFrame, frame: DataFrame => DataFrame,
+      probe: Option[DataFrame] = None): Option[Side] = {
+    val spark = in.sparkSession
+    val lazyRows = frame(in)
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    val side =
+      if (limit >= 0 && lazyRows.queryExecution.optimizedPlan.stats.sizeInBytes <= limit) {
+        val one = frame(in.coalesce(1))
+        val got = one.collect()
+        val keyAt = keyCols.map(one.schema.fieldIndex)
+        requireNonNullKeys(got.exists(r => keyAt.exists(r.isNullAt)))
+        val bucketAt = one.schema.fieldIndex(BucketCol)
+        Side(spark.createDataFrame(got.toSeq.asJava, one.schema).coalesce(1),
+          got.map(_.getLong(bucketAt)).toSet, local = true)
+      } else
+        Side(lazyRows, collectTouchedRequireKeys(probe.getOrElse(lazyRows)), local = false)
+    Some(side).filter(_.touched.nonEmpty)
   }
 
   /** The row's full payload as a canonical JSON image (all columns except

@@ -9,12 +9,14 @@ import org.apache.spark.sql.functions._
   * (N rows over B copy-on-write commits) with a job-level listener and
   * reports, per phase, wall seconds, Spark job count, and the file count
   * the table accumulates — so a protocol optimization moves a measured
-  * number instead of a guess. */
+  * number instead of a guess. Runs on `SPARK_GRAFT_CPUS` cores (default
+  * 32), as [[graft.Bench]] does. */
 object CommitProfile {
   def main(args: Array[String]): Unit = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(graft.Tables.sessionConf)

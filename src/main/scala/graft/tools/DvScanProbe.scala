@@ -5,13 +5,15 @@ import org.apache.spark.sql.functions._
 
 /** Scratch profiler for the dv fold scan's cost shape (dev tool, not a
   * driver surface): times each phase of the dv_scan bench point at one
-  * bucket count to attribute the fold-vs-plain gap. */
+  * bucket count to attribute the fold-vs-plain gap. Runs on
+  * `SPARK_GRAFT_CPUS` cores (default 32), as [[graft.Bench]] does. */
 object DvScanProbe {
   def main(args: Array[String]): Unit = {
     val buckets = if (args.nonEmpty) args(0).toInt else 256
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .appName("dv-scan-probe").master(s"local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
+      .appName("dv-scan-probe").master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config(graft.Tables.sessionConf)
       .getOrCreate()

@@ -7,13 +7,15 @@ import org.apache.spark.sql.SparkSession
   * same guarded posting frame, next to the profile stats and the
   * decision the cost model takes — the calibration measurement for the
   * sparse-unit-vs-dense-multiply weight. Not part of the driver
-  * contract. */
+  * contract. Runs on `SPARK_GRAFT_CPUS` cores (default 32), as
+  * [[graft.Bench]] does. */
 object LayoutProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(graft.Tables.sessionConf)

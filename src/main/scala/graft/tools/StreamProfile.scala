@@ -7,13 +7,15 @@ import org.apache.spark.sql.functions._
   * equivalent of records-source → parse → select → gzip text write at
   * several chunk sizes and prints the optimized plan, so parse pruning
   * and task parallelism effects are attributable outside the streaming
-  * machinery. Not part of the driver contract. */
+  * machinery. Not part of the driver contract. Runs on
+  * `SPARK_GRAFT_CPUS` cores (default 32), as [[graft.Bench]] does. */
 object StreamProfile {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toInt).getOrElse(50000)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config(graft.Tables.sessionConf)
@@ -21,7 +23,7 @@ object StreamProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val epoch0 = 1704103500000L
-    for (chunk <- Seq(5000, n / 32 max 1)) {
+    for (chunk <- Seq(5000, n / cpus.toInt max 1)) {
       val dir = java.nio.file.Files.createTempDirectory("graft_sprof_").toString
       val raw = spark.range(n).select(
         lpad(col("id").cast("string"), 56, "0").as("sequenceNumber"),

@@ -18,7 +18,12 @@ import graft.sinks.ManifestUpsertSink
   * equal the model, both tables' change feeds for the statement equal
   * the model's (as a multiset of key, change, old and new image; empty
   * when nothing committed), and the MoR table's metadata-only COUNT(*)
-  * equals the model's size. */
+  * equals the model's size. The sequence ends with a statement whose
+  * batch repeats a key at a tied order value, so the LWW tiebreak must
+  * pick the model's winner. It runs twice: on the default session, where
+  * these small statement sides are collected to the driver, and with
+  * `spark.sql.autoBroadcastJoinThreshold=-1`, where they stay lazy
+  * frames. */
 class ManifestRowLevelParitySpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -50,7 +55,14 @@ class ManifestRowLevelParitySpec extends AnyFunSuite {
           Option(r.getString(2)), Option(r.getString(3))))
     }.sortBy(_.toString)
 
-  test("CoW, MoR (with over-cap fallbacks) and a Map model agree after every statement") {
+  /** The LWW tiebreak of a tied order value: the larger xxhash64 of the
+    * row's sorted-column JSON image wins. */
+  private def tiebreak(r: Row3): Long = {
+    import spark.implicits._
+    Seq(image(r)).toDF("j").select(xxhash64(col("j"))).as[Long].head()
+  }
+
+  private def paritySequence(): Unit = {
     import spark.implicits._
     val rnd = new Random(20261018L)
     val cowRoot = Files.createTempDirectory("graft_parity_cow_").toString
@@ -72,10 +84,15 @@ class ManifestRowLevelParitySpec extends AnyFunSuite {
     def deletes(): Seq[Long] =
       Seq.fill(1 + rnd.nextInt(4))(1L + rnd.nextInt(Keys + 6)).distinct
 
-    for (step <- 0 until Steps) {
-      val kind = if (step == 0) 0 else rnd.nextInt(3)
-      val ups = if (kind == 1) Nil else upserts(step)
-      val dels = if (kind == 0) Nil else deletes()
+    // the last statement: key 3 twice and key 30 three times at one seq
+    // (30 also deleted, so the upsert must win over its own delete)
+    val tied: Seq[Row3] = Seq((3L, "tieA", 777L), (3L, "tieB", 777L),
+      (30L, "tieC", 777L), (30L, "tieD", 777L), (30L, "tieE", 777L), (3L, "old", 700L))
+
+    for (step <- 0 to Steps) {
+      val kind = if (step == 0) 0 else if (step == Steps) 2 else rnd.nextInt(3)
+      val ups = if (step == Steps) tied else if (kind == 1) Nil else upserts(step)
+      val dels = if (step == Steps) Seq(30L, 4L) else if (kind == 0) Nil else deletes()
       val upsDf: DataFrame = ups.toDF("id", "p", "seq")
       val delDf: DataFrame = dels.toDF("id")
       val id = step.toLong
@@ -94,7 +111,7 @@ class ManifestRowLevelParitySpec extends AnyFunSuite {
       }
       // the model: LWW within the statement, an upserted key survives its
       // own delete, deletes of absent keys change nothing
-      val won = ups.groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(_._3) }
+      val won = ups.groupBy(_._1).map { case (k, rs) => k -> rs.maxBy(r => (r._3, tiebreak(r))) }
       val expected: Seq[Change] = (won.values.toSeq.map { r =>
         val old = model.get(r._1)
         (r._1, if (old.isDefined) "updated" else "inserted", old.map(image), Some(image(r)))
@@ -113,6 +130,12 @@ class ManifestRowLevelParitySpec extends AnyFunSuite {
         s"MoR COUNT(*) must be answered from metadata at $label")
       val counted = countDf.as[Long].head()
       assert(counted == model.size, s"MoR metadata COUNT(*) $counted != ${model.size} at $label")
+      for (m <- ManifestUpsertSink.latestManifest(morRoot)) {
+        val fileRows = if (m.files.isEmpty) 0L else spark.read.parquet(m.files.map(_.path): _*).count()
+        val dvRows = m.dvs.map(_.rows).sum
+        assert(fileRows - dvRows == model.size,
+          s"MoR Σfile rows $fileRows − Σdv rows $dvRows != ${model.size} at $label")
+      }
       if (version(morRoot) != morV) {
         val now = ManifestUpsertSink.latestManifest(morRoot).get.files.map(_.path).toSet
         if (morFiles.forall(_.subsetOf(now))) morAppends += 1 else morRewrites += 1
@@ -122,5 +145,13 @@ class ManifestRowLevelParitySpec extends AnyFunSuite {
     assert(morAppends > 0 && morRewrites > 0,
       s"the sequence must exercise both MoR commits ($morAppends) and over-cap " +
         s"copy-on-write fallbacks ($morRewrites)")
+  }
+
+  test("CoW, MoR (with over-cap fallbacks) and a Map model agree after every statement") {
+    paritySequence()
+  }
+
+  test("the same sequence agrees with the model when every side stays a lazy frame (threshold -1)") {
+    TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(paritySequence())
   }
 }

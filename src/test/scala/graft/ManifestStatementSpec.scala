@@ -12,8 +12,9 @@ import graft.sinks.ManifestUpsertSink
 /** The row-level statement pipeline's own rules: the merge-on-read dv
   * invariant (Σ new dv rows == the feed's retired rows) fails the
   * commit loudly; a statement that changes no row commits no version in
-  * either mode; a CDC mirror applies each micro-batch's upserts and
-  * deletes as one version. */
+  * either mode; a null key refuses before anything is written; a CDC
+  * mirror applies each micro-batch's upserts and deletes as one
+  * version. */
 class ManifestStatementSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -85,6 +86,41 @@ class ManifestStatementSpec extends AnyFunSuite {
       "no-op statements must not commit")
     assert(!Files.exists(Paths.get(root, "_stage")), "no stage may remain")
     assert(children(Paths.get(root, "data")) == dataBefore, "no data file may be written")
+  }
+
+  test("a NULL key refuses with nothing committed and no stage or dv dir, on both classify paths") {
+    import spark.implicits._
+    // default: these sides are collected to the driver; -1: lazy frames
+    for (limit <- Seq(None, Some("-1"))) {
+      val root = Files.createTempDirectory("graft_null_key_").toString
+      val sink = seeded(root)
+      val v0 = ManifestUpsertSink.latestManifest(root).get.version
+      val dataBefore = children(Paths.get(root, "data"))
+      def nullUps = Seq((Some(1L), "u1", 2L), (None, "u0", 2L), (Some(41L), "n41", 2L))
+        .toDF("id", "p", "seq")
+      def nullDels = Seq(Some(5L), None).toDF("id")
+      def ups = Seq((2L, "u2", 2L)).toDF("id", "p", "seq")
+      val statements: Seq[(String, () => Unit)] = Seq(
+        "upsertBatch" -> (() => sink.upsertBatch(nullUps, "seq", 1L)),
+        "upsertMergeOnRead" -> (() => sink.upsertMergeOnRead(nullUps, "seq", 1L)),
+        "deleteKeys" -> (() => sink.deleteKeys(nullDels, 1L)),
+        "deleteKeysMergeOnRead" -> (() => sink.deleteKeysMergeOnRead(nullDels, 1L)),
+        "applyDelta" -> (() => sink.applyDelta(ups, nullDels, "seq", 1L)),
+        "applyDeltaMergeOnRead" -> (() => sink.applyDeltaMergeOnRead(ups, nullDels, "seq", 1L)))
+      def refuses(): Unit = statements.foreach { case (verb, run) =>
+        val label = s"$verb (threshold ${limit.getOrElse("default")})"
+        val err = intercept[IllegalArgumentException](run())
+        assert(err.getMessage.contains("batch carries a NULL key component (id)"),
+          s"$label: ${err.getMessage}")
+        assert(ManifestUpsertSink.latestManifest(root).get.version == v0,
+          s"$label must commit no version")
+        assert(!Files.exists(Paths.get(root, "_stage")), s"$label must leave no stage")
+        assert(children(Paths.get(root, "data")) == dataBefore,
+          s"$label must leave no data or dv dir")
+      }
+      limit.fold(refuses())(TestSpark.withConf("spark.sql.autoBroadcastJoinThreshold", _)(refuses()))
+      assert(sink.read(spark).count() == 40L)
+    }
   }
 
   test("a CDC mirror applies a micro-batch's upserts and deletes as ONE version") {

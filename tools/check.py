@@ -2,9 +2,11 @@
 """Local replica of the driver's correctness gate: for each query dir in
 OUT_DIR, run the oracle SQL in DuckDB over the sf parquet tables, sort
 columns by name, canonicalize, and compare row counts / schema / values
-against the Spark-dumped parquet. Usage: check.py <sfdir> <outdir> [name...]
+against the Spark-dumped parquet. Each result records its oracle's
+DuckDB seconds (`oracle_s`), and the ten slowest oracles print to stderr.
+Usage: check.py <sfdir> <outdir> [name...]
 """
-import sys, json, math, glob, os
+import sys, json, math, glob, os, time
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -41,12 +43,14 @@ def main():
         if name not in oracle:
             results[name] = {"rows": len(spark_df), "oracle": False}
             continue
+        t0 = time.perf_counter()
         try:
             ora_df = con.execute(oracle[name]).fetchdf()
         except Exception as e:
-            results[name] = {"err": f"oracle failed: {e}"}
+            results[name] = {"err": f"oracle failed: {e}",
+                             "oracle_s": round(time.perf_counter() - t0, 3)}
             continue
-        r = {}
+        r = {"oracle_s": round(time.perf_counter() - t0, 3)}
         s_cols, o_cols = sorted(spark_df.columns), sorted(ora_df.columns)
         r["schema_match"] = s_cols == o_cols
         if not r["schema_match"]:
@@ -76,6 +80,11 @@ def main():
     ok = sum(1 for r in results.values()
              if r.get("hash_match") or (r.get("oracle") is False and r.get("rows", 0) > 0))
     print(json.dumps(results, indent=1, default=str))
+    timed = sorted(((r["oracle_s"], n) for n, r in results.items() if "oracle_s" in r),
+                   reverse=True)
+    if timed:
+        print("slowest oracles: " + ", ".join(f"{n} {s:.1f}s" for s, n in timed[:10]),
+              file=sys.stderr)
     print(f"\n== {ok}/{len(results)} green", file=sys.stderr)
 
 if __name__ == "__main__":
