@@ -1080,7 +1080,7 @@ object Dedup {
         .orderBy(col("doc_id"))
     },
     Some(OracleShingles + """,
-      pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
+      pairs AS MATERIALIZED (SELECT a.doc_id AS a_id, b.doc_id AS b_id
         FROM s a JOIN s b ON a.doc_id < b.doc_id
         WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6),
@@ -1151,7 +1151,7 @@ object Dedup {
   /** Shared DuckDB CTE for the verified LSH near-dup pair graph at the
     * q41 threshold (0.6) — the edge list q204/q236/q237 analyze. */
   private val OraclePairs = OracleShingles + """,
-      pairs AS (SELECT a.doc_id AS a_id, b.doc_id AS b_id
+      pairs AS MATERIALIZED (SELECT a.doc_id AS a_id, b.doc_id AS b_id
         FROM s a JOIN s b ON a.doc_id < b.doc_id
         WHERE len(list_intersect(a.sh, b.sh))::DOUBLE
             / len(list_distinct(list_concat(a.sh, b.sh))) >= 0.6)"""

@@ -122,9 +122,12 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
 
   /** The write-path bucket assignment — one xxhash64 over ALL key
     * components (seed 42, the Column-function default), matching
-    * [[ManifestStats.bucketOf]] exactly. */
-  private def bucketExpr: Column =
-    pmod(xxhash64(keyCols.map(col): _*), lit(buckets.toLong))
+    * [[ManifestStats.bucketOf]] exactly; an epoch rewrite
+    * ([[recluster]]) hashes under the new pair. */
+  private def bucketExpr: Column = bucketOf(keyCols, buckets)
+
+  private def bucketOf(keys: Seq[String], n: Int): Column =
+    pmod(xxhash64(keys.map(col): _*), lit(n.toLong))
 
   private def keyColumns: Seq[Column] = keyCols.map(col)
 
@@ -334,14 +337,8 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
         xxhash64(col("new_image")).as("new_hash"),
         col("old_image"), col("new_image")): _*)
     }
-    val delFeed = for (c <- current; d <- dels) yield {
-      val victims = c.join(d.select(keyColumns: _*), keyCols, "left_semi")
-      victims.select(keyColumns ++ Seq(lit("deleted").as("change"),
-        xxhash64(payloadImage(victims)).as("old_hash"),
-        lit(null).cast("long").as("new_hash"),
-        payloadImage(victims).as("old_image"),
-        lit(null).cast("string").as("new_image")): _*)
-    }
+    val delFeed = for (c <- current; d <- dels)
+      yield deletedFeed(c.join(d.select(keyColumns: _*), keyCols, "left_semi"))
     val feed = (upFeed ++ delFeed).reduce(_ unionByName _)
     val stage = s"$root/_stage/$tag"
     def dropStage(): Unit = { deleteTree(store, stage); store.deleteDirIfEmpty(s"$root/_stage") }
@@ -426,18 +423,10 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * survive file-level pruning also skip row groups inside the files
     * they do open (Spark's vectorized reader tests pushed equality
     * filters against the bloom automatically — free at read time, a few
-    * KB per row group at write time). */
-  private def writeData(df: DataFrame, dataDir: String,
-      relayout: Boolean = true): Unit =
-    writeDataKeyed(df, dataDir, keyCols, relayout)
-
-  private def writeDataKeyed(df: DataFrame, dataDir: String, cols: Seq[String],
-      relayout: Boolean = true): Unit =
-    writeDataPartitioned(df, dataDir, cols, partitionCol, relayout)
-
-  private def writeDataPartitioned(df: DataFrame, dataDir: String,
-      cols: Seq[String], partCol: Option[String],
-      relayout: Boolean = true): Unit = {
+    * KB per row group at write time). `keys` and `partCol` are the
+    * sink's own unless an epoch rewrite writes under new ones. */
+  private def writeData(df: DataFrame, dataDir: String, keys: Seq[String] = keyCols,
+      partCol: Option[String] = partitionCol, relayout: Boolean = true): Unit = {
     // the partition value is DERIVED at write (date_format handles date,
     // timestamp, and ISO-string columns) and lives only in the directory
     // name — data files carry exactly the table columns, reads never see
@@ -473,8 +462,8 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     // per-task SortExec. The manifest's `sortedBy` stamp tracks whether
     // EVERY live file was written this way (full rewrites stamp; carried
     // pre-sorting vintages clear it until the next compaction).
-    cols.foldLeft(placed
-        .sortWithinPartitions((partBy ++ cols).map(col): _*)
+    keys.foldLeft(placed
+        .sortWithinPartitions((partBy ++ keys).map(col): _*)
         .write.mode("overwrite")
         // ADAPTIVE bloom sizing (parquet-mr 1.14+): without it every
         // bloom is allocated at parquet.bloom.filter.max.bytes (1 MiB)
@@ -524,8 +513,9 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * Post-commit (advisory, crash costs speed never rows): the staged
     * change feed renames to `_changes/v<FINAL>`, and the stats sidecar
     * writes as carried-forward lines + fresh footer stats of the files
-    * that made it into the manifest. */
-  /** `dvReplaced`: buckets whose DELETION-VECTOR entries this commit
+    * that made it into the manifest.
+    *
+    * `dvReplaced`: buckets whose DELETION-VECTOR entries this commit
     * owns — for any bucket REWRITE (merge, CoW delete, compaction) the
     * rewritten buckets, whose dvs the rewrite read-folded and therefore
     * MATERIALIZED (carrying them would double-count the deletion in the
@@ -599,15 +589,11 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
         else cur.flatMap(_.sortedBy).filter(_ == keyCol)
       beforeCommit(version)
       try {
-        commit(root, store, Manifest(version, id, Some(buckets), Some(keyCol),
+        commitFeed(Manifest(version, id, Some(buckets), Some(keyCol),
           files, Some(dataChanged), feedStage, rn, partCol = partitionCol,
           addedCols = added, droppedCols = droppedC, physSchema = stamp,
           dvs = dvs, defaults = dflts, sortedBy = sortedStamp,
           dvInexact = dvInexact))
-        feedStage.foreach { st =>
-          store.rename(s"$root/$st", s"$root/_changes/v$version")
-          store.deleteDirIfEmpty(s"$root/_stage")
-        }
         val prev = cur.map(c => loadStats(root, store, c.version)).getOrElse(Map.empty)
         val carriedStats = files.flatMap(f => prev.get(f.path).map(f.path -> _)).toMap
         val mine = mineStamped.map(_.path)
@@ -769,10 +755,21 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     (m("rows").asInstanceOf[Long], m("retired").asInstanceOf[Long])
   }
 
-  /** [[writeFeed]] as a pass-through for `.transform` chains. */
-  private def writeFeedFn(tag: String)(changes: DataFrame): DataFrame = {
-    writeFeed(changes, tag); changes
+  /** Stage a maintenance verb's change feed; returns the stage dir its
+    * manifest's `feed` header names until [[commitFeed]] renames it. */
+  private def stageFeed(changes: DataFrame): String = {
+    val tag = newTag()
+    writeFeed(changes, tag)
+    s"_stage/$tag"
   }
+
+  /** The `deleted` feed rows of `victims`, with their BEFORE images. */
+  private def deletedFeed(victims: DataFrame): DataFrame =
+    victims.select(keyColumns ++ Seq(lit("deleted").as("change"),
+      xxhash64(payloadImage(victims)).as("old_hash"),
+      lit(null).cast("long").as("new_hash"),
+      payloadImage(victims).as("old_image"),
+      lit(null).cast("string").as("new_image")): _*)
 
   /** Write a statement's deletion-vector sidecar — the victim KEY TUPLES,
     * bucket-partitioned, one small file per touched bucket — and return
@@ -902,17 +899,121 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
   /** Snapshot read of the latest committed version. */
   def read(spark: SparkSession): DataFrame = ManifestUpsertSink.read(spark, root)
 
-  /** The physical snapshot frame the DDL verbs validate name sets
-    * against. A snapshot listing ZERO files (legacy truncated table)
-    * must not reach `readPhysical` — an unstamped zero-path
-    * `spark.read.parquet()` throws an opaque "Unable to infer schema"
-    * for an otherwise legal DDL; the schema is the stamp when present,
-    * else empty (nothing physical to validate against). */
-  private def physSnapshotForDdl(spark: SparkSession, cur: Manifest): DataFrame =
-    if (cur.files.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        cur.physSchema.map(StructType.fromDDL).getOrElse(new StructType()))
-    else readPhysical(spark, cur, cur.files.map(_.path))
+  // ------------------------------------------- the maintenance verbs' commit path
+
+  /** The HEAD GUARD of a maintenance verb: the latest committed manifest,
+    * its crashed writer's staged feed healed, checked against this sink's
+    * committed layout ([[requireSameBuckets]]); None on a table with no
+    * commit. A head `noop` picks out is returned as None before the
+    * layout check (compacting a table that lists no files is a no-op
+    * under any layout). */
+  private def headOption(noop: Manifest => Boolean = _ => false): Option[Manifest] = {
+    val cur = latestManifest(root, store)
+    healFeed(cur)
+    val live = cur.filterNot(noop)
+    requireSameBuckets(live)
+    live
+  }
+
+  /** [[headOption]] for a verb that needs a committed table. */
+  private def head(verb: String): Manifest = headOption().getOrElse(
+    throw new IllegalStateException(s"no committed manifest under $root — nothing to $verb"))
+
+  /** The HEADER CARRY of a metadata-only commit: every header and entry
+    * of `cur` at the next version, with no feed and `touched = None` (a
+    * concurrent writer aborts rather than rebasing across it). The
+    * layout headers are stamped from this sink explicitly, so a manifest
+    * written before they existed records them now; `ts` is restamped by
+    * [[commit]]. Each verb overrides only what it changes. */
+  private def carry(cur: Manifest): Manifest =
+    cur.copy(version = cur.version + 1, buckets = Some(buckets), keyCol = Some(keyCol),
+      partCol = partitionCol, touched = None, feed = None)
+
+  /** [[commit]] `m` under `toRoot`, then rename its staged change feed, if
+    * it has one, to the final `_changes/v<N>`. */
+  private def commitFeed(m: Manifest, toRoot: String = root,
+      toStore: TableStore = store): Unit = {
+    commit(toRoot, toStore, m)
+    for (st <- m.feed) {
+      toStore.rename(s"$toRoot/$st", s"$toRoot/_changes/v${m.version}")
+      toStore.deleteDirIfEmpty(s"$toRoot/_stage")
+    }
+  }
+
+  /** The STATS CARRY: [[commitFeed]] a version whose files all come from
+    * version `statsFrom` of this table (same physical files, so their
+    * footer stats are exact), then write its sidecar as those files'
+    * lines of `statsFrom`'s — never a footer read. */
+  private def commitCarried(m: Manifest, statsFrom: Long, toRoot: String = root,
+      toStore: TableStore = store): Unit = {
+    commitFeed(m, toRoot, toStore)
+    val paths = m.files.map(_.path).toSet
+    val stats = loadStats(root, store, statsFrom).filter { case (p, _) => paths(p) }
+    if (stats.nonEmpty)
+      toStore.putString(s"$toRoot/_manifest", s"v${m.version}.stats", ManifestStats.encode(stats))
+  }
+
+  /** The NAME CENSUS the DDL verbs validate against (one merged-footer
+    * read, a fair price for a DDL): the snapshot's physical and logical
+    * column names, and its RETIRED names — rename sources, physical-only
+    * vintages, and logically-dropped columns, whose bytes still sit in
+    * old files, so reusing the name would resurrect them through the
+    * fold. A snapshot listing ZERO files (legacy truncated table) reads
+    * its names off the stamp, else none: an unstamped zero-path
+    * `spark.read.parquet()` throws an opaque "Unable to infer schema". */
+  private def nameCensus(spark: SparkSession,
+      cur: Manifest): (Set[String], Set[String], Set[String]) = {
+    val physDf =
+      if (cur.files.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          cur.physSchema.map(StructType.fromDDL).getOrElse(new StructType()))
+      else readPhysical(spark, cur, cur.files.map(_.path))
+    val physical = physDf.columns.toSet
+    val logical = applyEvolution(physDf, cur).columns.toSet
+    (physical, logical,
+      cur.renames.map(_._1).toSet ++ physical.diff(logical) ++ cur.droppedCols)
+  }
+
+  /** THE FULL REWRITE: the LOGICAL rows of `entries` (the evolution and dv
+    * folds materialize on the way) bucketed by (`keys`, `nBuckets`), laid
+    * out by `layout` (one task per bucket by default) and written
+    * key-sorted under `partCol` into a fresh `<toRoot>/data/v<version>-…`
+    * dir. Returns the written entries at sequence `version` and the
+    * written schema. Compactions, the epoch changes and the deep clone
+    * are this rewrite with different arguments. */
+  private def rewrite(spark: SparkSession, cur: Manifest, version: Long,
+      entries: Seq[FileEntry], toRoot: String = root, toStore: TableStore = store,
+      keys: Seq[String] = keyCols, nBuckets: Int = buckets,
+      partCol: Option[String] = partitionCol)(
+      layout: DataFrame => DataFrame = _.repartition(nBuckets, col(BucketCol)))
+      : (Seq[FileEntry], StructType) = {
+    val all = layout(readLogical(spark, cur, entries)
+      .withColumn(BucketCol, bucketOf(keys, nBuckets)))
+    for (p <- partCol)
+      require(all.columns.contains(p),
+        s"cannot partition by $p: no such column (have ${all.columns.sorted.mkString(", ")})")
+    val dataDir = s"$toRoot/data/v$version-${newTag()}"
+    writeData(all, dataDir, keys, partCol, relayout = false)
+    (listParquet(dataDir, toStore).map(_.copy(seq = version)), all.schema)
+  }
+
+  /** Commit a full [[rewrite]] of `cur` as version `version` of the table
+    * at `toRoot`, under the layout (`key`, `nBuckets`, `partCol`): only
+    * fresh files, so no evolution header and no dv, an exact schema
+    * stamp, key-sorted, and a sidecar read from the new footers; `touched
+    * = None`, so a concurrent writer aborts and re-opens against the new
+    * layout. Returns the sink bound to that table and layout. */
+  private def rewriteInto(spark: SparkSession, cur: Manifest, version: Long,
+      toRoot: String, toStore: TableStore, key: String, nBuckets: Int,
+      partCol: Option[String]): ManifestUpsertSink = {
+    val (written, schema) = rewrite(spark, cur, version, cur.files, toRoot, toStore,
+      splitKeyCols(key), nBuckets, partCol)()
+    commit(toRoot, toStore, Manifest(version, cur.batchId, Some(nBuckets), Some(key),
+      written, partCol = partCol, physSchema = exactPhysSchema(schema), sortedBy = Some(key)))
+    toStore.putString(s"$toRoot/_manifest", s"v$version.stats",
+      ManifestStats.encode(ManifestStats.collectAuto(written.map(_.path))))
+    new ManifestUpsertSink(toRoot, key, nBuckets, partCol)
+  }
 
   /** Compact the current snapshot: rewrite EVERY bucket's live rows as a
     * fresh one-file-per-bucket set and commit it as a new version. The
@@ -951,10 +1052,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * fraction test (never guess). */
   def compactIncremental(spark: SparkSession, minFilesPerBucket: Int = 4,
       maxDvFraction: Double = 1.0): Unit = {
-    val cur = latestManifest(root, store).getOrElse(return)
-    healFeed(Some(cur))
-    if (cur.files.isEmpty) return
-    requireSameBuckets(Some(cur))
+    val cur = headOption(_.files.isEmpty).getOrElse(return)
     // dv sidecars count toward the threshold: a bucket dragging
     // deletion vectors costs every read its anti-join, so incremental
     // maintenance folds them exactly as it folds small files
@@ -974,24 +1072,18 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
         if fs.size + cur.dvsOf(b).size >= math.max(1, minFilesPerBucket) ||
           dvHeavy(b, fs) => b }.toSet
     if (fat.isEmpty) return
-    val version = cur.version + 1
-    val fatEntries = cur.files.filter(f => fat(f.bucket))
     // evolution + dv fold applied on read: rewritten buckets come out
     // under the logical schema with their deletion vectors materialized;
     // carried buckets keep needing the folds (headers/entries carried
     // below) until a FULL compaction materializes them everywhere
-    val rows = readLogical(spark, cur, fatEntries)
-      .withColumn(BucketCol, bucketExpr)
-      .repartition(math.max(fat.size, 1), col(BucketCol))
-    val dataDir = s"$root/data/v$version-${newTag()}"
-    writeData(rows, dataDir, relayout = false)
-    val written = listParquet(dataDir, store)
+    val (written, schema) = rewrite(spark, cur, cur.version + 1,
+      cur.files.filter(f => fat(f.bucket)))(_.repartition(math.max(fat.size, 1), col(BucketCol)))
     // data-preserving rewrite of the fat buckets: dataChanged is empty,
     // so a concurrent merge into one of them simply wins that bucket
     val committedV = commitRebasing(Some(cur), cur.batchId, dataChanged = Set.empty,
       replaced = fat, written = written, feedStage = None, renames = cur.renames,
       addedCols = cur.addedCols, droppedCols = cur.droppedCols,
-      writtenSchema = rows.schema,
+      writtenSchema = schema,
       dvWritten = Nil, dvReplaced = fat, // fat buckets' dvs are materialized
       defaults = cur.defaults)
     // a compaction changes no logical row: the census carries verbatim
@@ -1083,10 +1175,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * Commits with `touched = None` so any concurrent writer aborts
     * conservatively rather than rebasing across a schema change. */
   def renameColumn(spark: SparkSession, oldName: String, newName: String): ManifestUpsertSink = {
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to rename"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("rename")
     require(oldName != newName, "rename to the same name is a no-op")
     // validate against BOTH current schemas (one merged-footer read, a
     // fair price for a DDL). Logical: renaming onto an existing column
@@ -1099,14 +1188,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     // new-vintage physical `a` coalesce into b and read null as logical
     // a until a full compaction (Delta's column mapping guards the same
     // hazard with field ids; the name-keyed mapping must refuse reuse).
-    val physDf = physSnapshotForDdl(spark, cur)
-    val physical = physDf.columns.toSet
-    val logical = applyEvolution(physDf, cur).columns.toSet
-    // retired names: rename SOURCES, physical-only vintages, and
-    // logically-DROPPED columns (their bytes still sit in pre-drop
-    // files — reusing the name would resurrect them through the fold)
-    val retired = cur.renames.map(_._1).toSet ++ physical.diff(logical) ++
-      cur.droppedCols
+    val (_, logical, retired) = nameCensus(spark, cur)
     require(logical(oldName),
       s"cannot rename: column $oldName does not exist (have ${logical.toSeq.sorted.mkString(", ")})")
     require(!logical(newName),
@@ -1126,24 +1208,14 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     // header entry too (the fold applies renames BEFORE the add-fill, so
     // the entry must live under the new name); post-add files that carry
     // it physically are covered by the ordinary rename pair
-    val newAdded = cur.addedCols.map { case (n, t) =>
-      (if (n == oldName) newName else n, t)
-    }
-    val newDefaults = cur.defaults.map { case (n, d) =>
-      (if (n == oldName) newName else n, d)
-    }
-    commit(root, store, Manifest(cur.version + 1, cur.batchId, Some(buckets),
-      Some(newKey), cur.files, touched = None, feed = None,
-      renames = cur.renames :+ (oldName -> newName), partCol = newPart,
-      addedCols = newAdded, droppedCols = cur.droppedCols,
-      physSchema = cur.physSchema, dvs = cur.dvs, defaults = newDefaults,
-      sortedBy = cur.sortedBy.map(_ => newKey), dvInexact = cur.dvInexact))
-    // carry the previous sidecar verbatim: stats stay keyed by PHYSICAL
-    // column names, which is what the (rename-refusing) connector needs
-    val prev = loadStats(root, store, cur.version)
-    if (prev.nonEmpty)
-      store.putString(s"$root/_manifest", s"v${cur.version + 1}.stats",
-        ManifestStats.encode(prev))
+    def respell(n: String): String = if (n == oldName) newName else n
+    // the sidecar carries verbatim: stats stay keyed by PHYSICAL column
+    // names, which is what the (rename-refusing) connector needs
+    commitCarried(carry(cur).copy(keyCol = Some(newKey), partCol = newPart,
+      renames = cur.renames :+ (oldName -> newName),
+      addedCols = cur.addedCols.map { case (n, t) => (respell(n), t) },
+      defaults = cur.defaults.map { case (n, d) => (respell(n), d) },
+      sortedBy = cur.sortedBy.map(_ => newKey)), statsFrom = cur.version)
     if (newKey == keyCol && newPart == partitionCol) this
     else new ManifestUpsertSink(root, newKey, buckets, newPart)
   }
@@ -1162,8 +1234,9 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * guards; Delta's column mapping dodges it with field ids, a
     * name-keyed format must refuse). Commits `touched = None` so any
     * concurrent writer aborts rather than rebasing across a schema
-    * change. */
-  /** `defaultSql` (NOT-NULL-DEFAULT add): the literal lives in the
+    * change.
+    *
+    * `defaultSql` (NOT-NULL-DEFAULT add): the literal lives in the
     * manifest header and every read folds absent/null bytes to it; the
     * next FULL compaction MATERIALIZES the value physically and clears
     * the header — after which the column is an ordinary (nullable)
@@ -1173,10 +1246,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * store assignment does, while the header lives). */
   def addColumn(spark: SparkSession, name: String, typeDdl: String,
       defaultSql: Option[String] = None): Unit = {
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to alter"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("alter")
     // NOT-NULL-DEFAULT add (Iceberg initial-default shape): the fold
     // reads absent/null as the LITERAL everywhere until a rewrite
     // materializes it. Literals only — a non-literal default would
@@ -1226,26 +1296,13 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
       s"type DDL '$typeDdl' contains a manifest separator (';'/tab/newline)")
     // parses-or-throws: a junk type must fail the DDL, not every read
     org.apache.spark.sql.types.DataType.fromDDL(typeDdl)
-    val physDf = physSnapshotForDdl(spark, cur)
-    val physical = physDf.columns.toSet
-    val logical = applyEvolution(physDf, cur).columns.toSet
+    val (_, logical, retired) = nameCensus(spark, cur)
     require(!logical(name), s"cannot add: column $name already exists")
-    val retired = cur.renames.map(_._1).toSet ++ physical.diff(logical) ++
-      cur.droppedCols
     require(!retired(name),
       s"cannot add $name: the name is retired by a live rename or DROP COLUMN — " +
         "old files still hold bytes under it; compact() to materialize first")
-    commit(root, store, Manifest(cur.version + 1, cur.batchId, Some(buckets),
-      Some(keyCol), cur.files, touched = None, feed = None,
-      renames = cur.renames, partCol = partitionCol,
-      addedCols = cur.addedCols :+ (name -> typeDdl), droppedCols = cur.droppedCols,
-      physSchema = cur.physSchema, dvs = cur.dvs,
-      defaults = cur.defaults ++ defaultSql.map(name -> _),
-      sortedBy = cur.sortedBy, dvInexact = cur.dvInexact))
-    val prev = loadStats(root, store, cur.version)
-    if (prev.nonEmpty)
-      store.putString(s"$root/_manifest", s"v${cur.version + 1}.stats",
-        ManifestStats.encode(prev))
+    commitCarried(carry(cur).copy(addedCols = cur.addedCols :+ (name -> typeDdl),
+      defaults = cur.defaults ++ defaultSql.map(name -> _)), statsFrom = cur.version)
   }
 
   /** DROP a column WITHOUT rewriting a byte of data — metadata-only
@@ -1261,39 +1318,23 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * refuse (they are the table's committed layout, not payload).
     * Commits `touched = None`: concurrent writers abort. */
   def dropColumn(spark: SparkSession, name: String): Unit = {
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to alter"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("alter")
     require(!keyCols.contains(name),
       s"cannot drop $name: it is a key column — the merge/bucket identity of every row")
     require(!partitionCol.contains(name),
       s"cannot drop $name: it is the table's partition column (committed layout)")
     require(!name.contains(","),
       s"column name '$name' contains a manifest separator (',')")
-    val physDf = physSnapshotForDdl(spark, cur)
-    val physical = physDf.columns.toSet
-    val logical = applyEvolution(physDf, cur).columns.toSet
+    val (physical, logical, _) = nameCensus(spark, cur)
     require(logical(name),
       s"cannot drop: column $name does not exist (have ${logical.toSeq.sorted.mkString(", ")})")
-    val newAdded = cur.addedCols.filterNot(_._1 == name)
     // physically present anywhere (incl. as a rename TARGET whose
     // retired sources still carry bytes) → the name must stay retired
     val sources = cur.renames.filter(_._2 == name).map(_._1)
     val physicallyHeld = physical(name) || sources.exists(physical)
-    val newDropped =
-      if (physicallyHeld) cur.droppedCols :+ name else cur.droppedCols
-    commit(root, store, Manifest(cur.version + 1, cur.batchId, Some(buckets),
-      Some(keyCol), cur.files, touched = None, feed = None,
-      renames = cur.renames, partCol = partitionCol,
-      addedCols = newAdded, droppedCols = newDropped,
-      physSchema = cur.physSchema, dvs = cur.dvs,
-      defaults = cur.defaults.filterNot(_._1 == name),
-      sortedBy = cur.sortedBy, dvInexact = cur.dvInexact))
-    val prev = loadStats(root, store, cur.version)
-    if (prev.nonEmpty)
-      store.putString(s"$root/_manifest", s"v${cur.version + 1}.stats",
-        ManifestStats.encode(prev))
+    commitCarried(carry(cur).copy(addedCols = cur.addedCols.filterNot(_._1 == name),
+      droppedCols = if (physicallyHeld) cur.droppedCols :+ name else cur.droppedCols,
+      defaults = cur.defaults.filterNot(_._1 == name)), statsFrom = cur.version)
   }
 
   /** WIDEN a column's type WITHOUT rewriting a byte of data — the third
@@ -1315,10 +1356,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * writers abort across a schema change. */
   def widenColumn(spark: SparkSession, name: String, toDdl: String): Unit = {
     import org.apache.spark.sql.types._
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to alter"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("alter")
     require(!keyCols.contains(name),
       s"cannot widen $name: it is a key column — bucket routing hashes values " +
         "by type, so a widened key would mis-route every future merge (recluster instead)")
@@ -1366,21 +1404,11 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     }
     val newStamp = StructType(stamp.fields.map(f =>
       if (spellings(f.name)) f.copy(dataType = to) else f)).toDDL
-    val newAdded = cur.addedCols.map { case (n, t) =>
-      if (n == name) (n, to.sql) else (n, t)
-    }
-    commit(root, store, Manifest(cur.version + 1, cur.batchId, Some(buckets),
-      Some(keyCol), cur.files, touched = None, feed = None,
-      renames = cur.renames, partCol = partitionCol,
-      addedCols = newAdded, droppedCols = cur.droppedCols,
-      physSchema = Some(newStamp), dvs = cur.dvs, defaults = cur.defaults,
-      sortedBy = cur.sortedBy, dvInexact = cur.dvInexact))
     // sidecar carried verbatim: integral domains are stored as longs and
     // float/double as doubles, so the widened column's bounds stay exact
-    val prev = loadStats(root, store, cur.version)
-    if (prev.nonEmpty)
-      store.putString(s"$root/_manifest", s"v${cur.version + 1}.stats",
-        ManifestStats.encode(prev))
+    commitCarried(carry(cur).copy(physSchema = Some(newStamp),
+      addedCols = cur.addedCols.map { case (n, t) => if (n == name) (n, to.sql) else (n, t) }),
+      statsFrom = cur.version)
   }
 
   /** RE-CLUSTER epoch change: rewrite the snapshot under a NEW
@@ -1399,26 +1427,8 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * guard names the committed pair). */
   def recluster(spark: SparkSession, newKeyCol: String, newBuckets: Int): ManifestUpsertSink = {
     require(newBuckets > 0, "bucket count must be positive")
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to re-cluster"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
-    val version = cur.version + 1
-    val newKeyCols = splitKeyCols(newKeyCol)
-    val all = readLogical(spark, cur, cur.files)
-      .drop(BucketCol)
-      .withColumn(BucketCol,
-        pmod(xxhash64(newKeyCols.map(col): _*), lit(newBuckets.toLong)))
-      .repartition(newBuckets, col(BucketCol))
-    val dataDir = s"$root/data/v$version-${newTag()}"
-    writeDataKeyed(all, dataDir, newKeyCols, relayout = false)
-    val written = listParquet(dataDir, store)
-    commit(root, store, Manifest(version, cur.batchId, Some(newBuckets),
-      Some(newKeyCol), written, touched = None, feed = None, partCol = partitionCol,
-      physSchema = exactPhysSchema(all.schema), sortedBy = Some(newKeyCol)))
-    store.putString(s"$root/_manifest", s"v$version.stats",
-      ManifestStats.encode(ManifestStats.collectAuto(written.map(_.path))))
-    new ManifestUpsertSink(root, newKeyCol, newBuckets, partitionCol)
+    val cur = head("re-cluster")
+    rewriteInto(spark, cur, cur.version + 1, root, store, newKeyCol, newBuckets, partitionCol)
   }
 
   /** PARTITION EVOLUTION: adopt, change, or drop the table's date
@@ -1437,28 +1447,9 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * to the new layout; this instance dies on its next write (the
     * partition-column mismatch guard names the committed value). */
   def repartitionBy(spark: SparkSession, newPartCol: Option[String]): ManifestUpsertSink = {
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to re-partition"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("re-partition")
     if (newPartCol == partitionCol) return this // same layout: no-op
-    val version = cur.version + 1
-    val all = readLogical(spark, cur, cur.files)
-      .drop(BucketCol)
-      .withColumn(BucketCol, bucketExpr)
-      .repartition(buckets, col(BucketCol))
-    for (p <- newPartCol)
-      require(all.columns.contains(p),
-        s"cannot partition by $p: no such column (have ${all.columns.sorted.mkString(", ")})")
-    val dataDir = s"$root/data/v$version-${newTag()}"
-    writeDataPartitioned(all, dataDir, keyCols, newPartCol, relayout = false)
-    val written = listParquet(dataDir, store)
-    commit(root, store, Manifest(version, cur.batchId, Some(buckets),
-      Some(keyCol), written, touched = None, feed = None, partCol = newPartCol,
-      physSchema = exactPhysSchema(all.schema), sortedBy = Some(keyCol)))
-    store.putString(s"$root/_manifest", s"v$version.stats",
-      ManifestStats.encode(ManifestStats.collectAuto(written.map(_.path))))
-    new ManifestUpsertSink(root, keyCol, buckets, newPartCol)
+    rewriteInto(spark, cur, cur.version + 1, root, store, keyCol, buckets, newPartCol)
   }
 
   /** RESTORE the table to committed `version` — rollback as a NEW
@@ -1492,10 +1483,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * (the pair may differ when rolling back across a recluster); this
     * instance dies on its next write if the pair changed. */
   def restore(spark: SparkSession, version: Long): ManifestUpsertSink = {
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to restore"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("restore")
     if (version == cur.version) return this // restoring the head: no-op
     require(version < cur.version,
       s"cannot restore to v$version: the table is at v${cur.version}")
@@ -1559,9 +1547,8 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
       case (None, Some(n)) => Some(n.withColumn("old_image", lit(null).cast("string")))
       case (None, None) => None
     }
-    val newVersion = cur.version + 1
     val feedStage = joined.map { j =>
-      val diff = j
+      stageFeed(j
         .filter(col("old_image").isNull || col("new_image").isNull ||
           col("old_image") =!= col("new_image"))
         .select(tKeys.map(col) ++ Seq(
@@ -1572,27 +1559,14 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
             .otherwise(xxhash64(col("old_image"))).as("old_hash"),
           when(col("new_image").isNull, lit(null).cast("long"))
             .otherwise(xxhash64(col("new_image"))).as("new_hash"),
-          col("old_image"), col("new_image")): _*)
-      val tag = newTag()
-      writeFeed(diff, tag)
-      s"_stage/$tag"
+          col("old_image"), col("new_image")): _*))
     }
-    commit(root, store, Manifest(newVersion, cur.batchId, Some(tBuckets),
-      Some(tKey), target.files, touched = None, feed = feedStage,
-      renames = target.renames, partCol = target.partCol,
-      addedCols = target.addedCols, droppedCols = target.droppedCols,
-      physSchema = target.physSchema, dvs = target.dvs,
-      defaults = target.defaults, sortedBy = target.sortedBy,
-      dvInexact = target.dvInexact))
-    feedStage.foreach { st =>
-      store.rename(s"$root/$st", s"$root/_changes/v$newVersion")
-      store.deleteDirIfEmpty(s"$root/_stage")
-    }
-    // the restored files ARE the target version's: its sidecar is exact
-    val prev = loadStats(root, store, version)
-    if (prev.nonEmpty)
-      store.putString(s"$root/_manifest", s"v$newVersion.stats",
-        ManifestStats.encode(prev))
+    // the target's headers and entries at the next version, under its own
+    // (keyCol, buckets, partCol) epoch; the restored files ARE the target
+    // version's, so its sidecar is exact
+    commitCarried(target.copy(version = cur.version + 1, batchId = cur.batchId,
+      buckets = Some(tBuckets), keyCol = Some(tKey), touched = None, feed = feedStage),
+      statsFrom = version)
     if (tKey == keyCol && tBuckets == buckets && target.partCol == partitionCol) this
     else new ManifestUpsertSink(root, tKey, tBuckets, target.partCol)
   }
@@ -1614,10 +1588,7 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * physical files — the stats are exact). */
   def cloneTo(spark: SparkSession, targetRoot: String,
       deep: Boolean = false): ManifestUpsertSink = {
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to clone"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("clone")
     // nested roots are forbidden in BOTH directions: vacuum's own-root
     // guard is a path-prefix test, so a table living inside another
     // table's root would pass the outer table's guard and could be
@@ -1639,17 +1610,11 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     // very rows it deletes/replaces. Version numbers are chain-local
     // names, so the gap costs nothing; the clone's history simply begins
     // where the fork happened.
-    if (!deep) {
-      commit(targetRoot, tStore, Manifest(cur.version, cur.batchId, Some(buckets),
-        Some(keyCol), cur.files, touched = None, feed = None, renames = cur.renames,
-        partCol = partitionCol, addedCols = cur.addedCols,
-        droppedCols = cur.droppedCols, physSchema = cur.physSchema,
-        dvs = cur.dvs, defaults = cur.defaults, sortedBy = cur.sortedBy,
-        dvInexact = cur.dvInexact))
-      val stats = loadStats(root, store, cur.version)
-      if (stats.nonEmpty)
-        tStore.putString(s"$targetRoot/_manifest", s"v${cur.version}.stats",
-          ManifestStats.encode(stats))
+    if (deep) rewriteInto(spark, cur, cur.version, targetRoot, tStore, keyCol, buckets,
+      partitionCol)
+    else {
+      commitCarried(carry(cur).copy(version = cur.version), statsFrom = cur.version,
+        targetRoot, tStore)
       // register the shallow clone under the SOURCE's manifest dir: the
       // source's vacuum reads these refs and SKIPS files a still-live
       // clone references — the documented Delta strand-the-clone caveat
@@ -1657,23 +1622,8 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
       // clone (its manifest log gone) releases the hold; deep clones
       // hold nothing (own files)
       store.putString(s"$root/_manifest", s"clone-${newTag()}.ref", tgtNorm)
-    } else {
-      // bucketExpr, not col(keyCol): a composite key spec ("a,b") is not
-      // a column name — the write-path expression hashes all components
-      val all = readLogical(spark, cur, cur.files)
-        .withColumn(BucketCol, bucketExpr)
-        .repartition(buckets, col(BucketCol))
-      val dataDir = s"$targetRoot/data/v${cur.version}-${newTag()}"
-      writeData(all, dataDir, relayout = false)
-      val written = listParquet(dataDir, tStore).map(_.copy(seq = cur.version))
-      commit(targetRoot, tStore, Manifest(cur.version, cur.batchId, Some(buckets),
-        Some(keyCol), written, touched = None, feed = None, renames = Nil,
-        partCol = partitionCol, physSchema = exactPhysSchema(all.schema),
-        sortedBy = Some(keyCol)))
-      tStore.putString(s"$targetRoot/_manifest", s"v${cur.version}.stats",
-        ManifestStats.encode(ManifestStats.collectAuto(written.map(_.path))))
+      new ManifestUpsertSink(targetRoot, keyCol, buckets, partitionCol)
     }
-    new ManifestUpsertSink(targetRoot, keyCol, buckets, partitionCol)
   }
 
   /** CREATE a writable BRANCH: a named commit chain INSIDE the table's
@@ -1694,26 +1644,14 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
   def createBranch(name: String): ManifestUpsertSink = {
     require(ManifestUpsertSink.validTagName(name),
       s"bad branch name '$name' — letters/digits/-/_/. only, not all-digits")
-    val cur = latestManifest(root, store).getOrElse(throw new IllegalStateException(
-      s"no committed manifest under $root — nothing to branch"))
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = head("branch")
     val bRoot = ManifestUpsertSink.branchRoot(root, name)
     val bStore = TableStore.forPath(bRoot)
     require(latestManifest(bRoot, bStore).isEmpty,
       s"branch '$name' already exists under $root (drop_branch first)")
-    commit(bRoot, bStore, Manifest(cur.version, cur.batchId, Some(buckets),
-      Some(keyCol), cur.files, touched = None, feed = None, renames = cur.renames,
-      partCol = partitionCol, addedCols = cur.addedCols,
-      droppedCols = cur.droppedCols, physSchema = cur.physSchema,
-      dvs = cur.dvs, defaults = cur.defaults, sortedBy = cur.sortedBy,
-      dvInexact = cur.dvInexact))
     // the fork's files ARE the source's: sidecar and catalog write
     // options carry verbatim
-    val stats = loadStats(root, store, cur.version)
-    if (stats.nonEmpty)
-      bStore.putString(s"$bRoot/_manifest", s"v${cur.version}.stats",
-        ManifestStats.encode(stats))
+    commitCarried(carry(cur).copy(version = cur.version), statsFrom = cur.version, bRoot, bStore)
     if (store.exists(s"$root/_catalog.properties"))
       bStore.putString(bRoot, "_catalog.properties",
         store.readString(s"$root/_catalog.properties"))
@@ -1832,32 +1770,21 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
   }
 
   private def compactInto(spark: SparkSession)(layout: DataFrame => DataFrame): Unit = {
-    val cur = latestManifest(root, store).getOrElse(return)
-    healFeed(Some(cur))
-    if (cur.files.isEmpty) return
-    requireSameBuckets(Some(cur))
-    val version = cur.version + 1
-    // the full rewrite MATERIALIZES the whole evolution fold: files come
-    // out under logical names, with metadata-only added columns written
-    // physically and dropped columns' bytes gone — and the committed
-    // headers clear, returning the table to the fully-vectorized scan
-    // evolution AND deletion-vector fold: the rewrite MATERIALIZES both
-    val all = layout(
-      readLogical(spark, cur, cur.files).withColumn(BucketCol, bucketExpr))
-    val dataDir = s"$root/data/v$version-${newTag()}"
-    writeData(all, dataDir, relayout = false)
-    val written = listParquet(dataDir, store)
+    val cur = headOption(_.files.isEmpty).getOrElse(return)
+    // the full rewrite MATERIALIZES the whole evolution AND deletion-vector
+    // fold: files come out under logical names, with metadata-only added
+    // columns written physically and dropped columns' bytes gone — and the
+    // committed headers clear, returning the table to the fully-vectorized scan
+    val (written, schema) = rewrite(spark, cur, cur.version + 1, cur.files)(layout)
     // full data-preserving rewrite: every snapshot bucket's entries are
     // replaced, no rows change — a concurrent merge wins its buckets at
     // rebase time (my rewrite of them is stale; the rest stands)
+    val rewritten = cur.files.map(_.bucket).toSet ++ written.map(_.bucket)
     val committedV = commitRebasing(Some(cur), cur.batchId, dataChanged = Set.empty,
-      replaced = cur.files.map(_.bucket).toSet ++ written.map(_.bucket),
-      written = written, feedStage = None, renames = Nil,
-      addedCols = Nil, droppedCols = Nil, writtenSchema = all.schema,
+      replaced = rewritten, written = written, feedStage = None, renames = Nil,
+      addedCols = Nil, droppedCols = Nil, writtenSchema = schema,
       // the full rewrite folded EVERY bucket's dvs into its new files
-      dvWritten = Nil,
-      dvReplaced = cur.files.map(_.bucket).toSet ++ written.map(_.bucket) ++
-        cur.dvs.map(_.bucket),
+      dvWritten = Nil, dvReplaced = rewritten ++ cur.dvs.map(_.bucket),
       defaults = Nil) // the full rewrite materialized every default
     // a compaction changes no logical row: the census carries verbatim
     foldColStats(committedV, None, contentUnchanged = true)
@@ -1878,8 +1805,9 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * retention-vs-VACUUM caveat Delta documents for its change data
     * feed. Default (None) keeps feeds on the data horizon, right when
     * no subscriber lags; deployments with streaming subscribers pass a
-    * horizon ≥ every subscriber's checkpoint lag. */
-  /** `orphanGraceMs`: also sweep data/stage dirs NO manifest references
+    * horizon ≥ every subscriber's checkpoint lag.
+    *
+    * `orphanGraceMs`: also sweep data/stage dirs NO manifest references
     * (crashed writers, rebase losers' stale bucket rewrites) whose newest
     * file is older than the grace — which must exceed the longest
     * in-flight write, since an active writer's uncommitted dir looks
@@ -1911,18 +1839,9 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
     * O(table) — subscribers that need deletion images use deleteKeys);
     * commits `touched = None`, so concurrent writers abort. No-op on an
     * already-empty (or never-written) table. */
-  def truncate(): Unit = {
-    val cur = latestManifest(root, store).getOrElse(return)
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
-    if (cur.files.isEmpty) return
-    commit(root, store, Manifest(cur.version + 1, cur.batchId, Some(buckets),
-      Some(keyCol), Seq.empty, touched = None, feed = None,
-      renames = cur.renames, partCol = partitionCol,
-      addedCols = cur.addedCols, droppedCols = cur.droppedCols,
-      physSchema = cur.physSchema, defaults = cur.defaults,
-      sortedBy = cur.sortedBy))
-  }
+  def truncate(): Unit =
+    for (cur <- headOption() if cur.files.nonEmpty)
+      commit(root, store, carry(cur).copy(files = Nil, dvs = Nil, dvInexact = false))
 
   /** RETENTION on a date-partitioned table: commit a new version WITHOUT
     * the files whose partition date precedes `cutoff` (ISO `yyyy-MM-dd`,
@@ -1947,50 +1866,23 @@ class ManifestUpsertSink(root: String, keyCol: String, buckets: Int = 16,
       "dropPartitionsBefore requires a partitioned table (partitionCol)")
     require(cutoff.matches("\\d{4}-\\d{2}-\\d{2}"),
       s"cutoff '$cutoff' is not an ISO yyyy-MM-dd date")
-    val cur = latestManifest(root, store).getOrElse(return)
-    healFeed(Some(cur))
-    requireSameBuckets(Some(cur))
+    val cur = headOption().getOrElse(return)
     // ISO dates compare lexicographically; unproven partitions (None or
     // the null-partition dir, which sorts above all digits) are kept
     val (dead, kept) = cur.files.partition(f =>
       partOf(f.path).exists(p => p.matches("\\d{4}-\\d{2}-\\d{2}") && p < cutoff))
     if (dead.isEmpty) return
-    val version = cur.version + 1
-    val feedStage = if (!cdc) None else Some {
-      // dv fold included: a dv-deleted key in an expiring file is already
-      // deleted and must not emit a second deletion image
-      val victims = readLogical(spark, cur, dead)
-      val tag = newTag()
-      victims.select(keyColumns ++ Seq(lit("deleted").as("change"),
-          xxhash64(payloadImage(victims)).as("old_hash"),
-          lit(null).cast("long").as("new_hash"),
-          payloadImage(victims).as("old_image"),
-          lit(null).cast("string").as("new_image")): _*)
-        .transform(writeFeedFn(tag))
-      s"_stage/$tag"
-    }
-    commit(root, store, Manifest(version, cur.batchId, Some(buckets),
-      Some(keyCol), kept, touched = None, feed = feedStage,
-      renames = cur.renames, partCol = partitionCol,
-      addedCols = cur.addedCols, droppedCols = cur.droppedCols,
-      // dvs carried: a dv key whose row expired with its file simply
-      // stops matching anything (retention never resurrects) — but the
-      // dv row counts may now OVER-estimate the deleted rows, so the
-      // commit flags them inexact; metadata-only COUNT declines until a
-      // full materialization clears the dvs
-      physSchema = cur.physSchema, dvs = cur.dvs, defaults = cur.defaults,
-      sortedBy = cur.sortedBy,
-      dvInexact = cur.dvInexact || cur.dvs.nonEmpty))
-    feedStage.foreach { st =>
-      store.rename(s"$root/$st", s"$root/_changes/v$version")
-      store.deleteDirIfEmpty(s"$root/_stage")
-    }
-    // kept files are unchanged: carry their sidecar lines verbatim
-    val prev = loadStats(root, store, cur.version)
-    val carried = kept.flatMap(f => prev.get(f.path).map(f.path -> _)).toMap
-    if (carried.nonEmpty)
-      store.putString(s"$root/_manifest", s"v$version.stats",
-        ManifestStats.encode(carried))
+    // dv fold included: a dv-deleted key in an expiring file is already
+    // deleted and must not emit a second deletion image
+    val feedStage = if (cdc) Some(stageFeed(deletedFeed(readLogical(spark, cur, dead)))) else None
+    // dvs carried: a dv key whose row expired with its file simply stops
+    // matching anything (retention never resurrects) — but the dv row
+    // counts may now OVER-estimate the deleted rows, so the commit flags
+    // them inexact; metadata-only COUNT declines until a full
+    // materialization clears the dvs. Kept files are unchanged: their
+    // sidecar lines carry verbatim.
+    commitCarried(carry(cur).copy(files = kept, feed = feedStage,
+      dvInexact = cur.dvInexact || cur.dvs.nonEmpty), statsFrom = cur.version)
   }
 }
 
