@@ -5,12 +5,17 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Attribute, AttributeReference, AttributeSet, Cast, Concat, CreateNamedStruct, Divide, EqualTo, Expression, ExpressionInfo, GetStructField, GreaterThan, GreaterThanOrEqual, If, LessThan, LessThanOrEqual, Literal, NullsFirst, PosExplode, RowNumber, Size, SortOrder, WindowExpression}
 import org.apache.spark.sql.catalyst.expressions.{ArrayDistinct, ArrayIntersect}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, LogicalPlan, Project, Window, WindowGroupLimit}
+import org.apache.spark.sql.catalyst.plans.physical.{RangePartitioning, SinglePartition}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StringType}
 import graft.functions._
 
 /** SparkSessionExtensions module: registers the engine's native
-  * expressions as SQL functions and installs the fusion optimizer rule —
+  * expressions as SQL functions and installs the fusion optimizer rules
+  * and the small-sort query-stage rule ([[SmallSortSinglePartition]]) —
   * the supported way to ship custom Catalyst work in a library
   * (`spark.sql.extensions=graft.GraftExtensions`, or
   * `.withExtensions(new GraftExtensions)` at session build).
@@ -30,6 +35,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // standard-SQL ANALYZE TABLE over manifest-lake catalogs (Spark has
     // no v2 ANALYZE path of its own — see GraftAnalyzeRule)
     ext.injectResolutionRule(_ => graft.sources.GraftAnalyzeRule)
+    ext.injectQueryStagePrepRule(_ => SmallSortSinglePartition)
   }
 }
 
@@ -221,6 +227,50 @@ object TopKAggregateRewrite extends Rule[LogicalPlan] {
         Project(projList, gen)
       }
   }
+}
+
+/** Query-stage preparation rule: a global sort over an input small
+  * enough that AQE would coalesce its range shuffle into one partition
+  * shuffles into that one partition directly, and so skips the job
+  * `RangePartitioner` runs to sample its bounds, which recomputes the
+  * sort's whole input (for q36, the events scan and the cookie parse).
+  * On the benchmark's `query_mix` (seed 2, 4 cores) that is 3 of the 17
+  * jobs a pass of the four short queries ran. `RangePartitioner`
+  * samples only when it has more than one partition, and AQE already
+  * runs such a shuffle's reduce side as one task, so the sort loses no
+  * parallelism and keeps its output order.
+  *
+  * It rewrites a `ShuffleExchangeExec` with `RangePartitioning(n > 1)`
+  * and origin `ENSURE_REQUIREMENTS` — the exchange only a global sort's
+  * `OrderedDistribution` inserts; a user's `repartitionByRange` has
+  * another origin and keeps its layout — into a `SinglePartition` one,
+  * when:
+  *  - AQE partition coalescing is on;
+  *  - the exchange's input, by its logical plan's size estimate, fits
+  *    the size AQE coalesces into one partition:
+  *    `coalescePartitions.minPartitionSize` under `parallelismFirst`
+  *    (the default), `advisoryPartitionSizeInBytes` otherwise.
+  *
+  * AQE applies the rule to the initial plan and again at each
+  * re-optimization, so a sort over a finished stage decides on that
+  * stage's runtime size. An estimate can under-count (a `Generate`
+  * keeps its child's size), which would put a larger sort in one task;
+  * no registered query slowed that way. */
+object SmallSortSinglePartition extends Rule[SparkPlan] {
+
+  override def apply(plan: SparkPlan): SparkPlan =
+    if (!conf.coalesceShufflePartitionsEnabled) plan
+    else {
+      val limit: Long =
+        if (conf.getConf(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST))
+          conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+        else conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+      plan.transformUp {
+        case e @ ShuffleExchangeExec(RangePartitioning(_, n), child, ENSURE_REQUIREMENTS, _)
+            if n > 1 && child.logicalLink.exists(_.stats.sizeInBytes <= limit) =>
+          e.copy(outputPartitioning = SinglePartition)
+      }
+    }
 }
 
 object JaccardFusion extends Rule[LogicalPlan] {

@@ -16,10 +16,11 @@ import org.apache.spark.sql.SparkSession
 object Preflight {
 
   /** Reclaim STALE graft temp dirs before a run. Every lake-building
-    * query materializes a physical table under `graft_*` in tmpdir and
-    * nothing deletes it (a shutdown hook per query would race the JVM's
-    * exit) — at 300+ such queries per Verify/Bench invocation, repeated
-    * rounds filled 79 GB and killed a test run with TASK_WRITE_FAILED
+    * query materializes a physical table under one per-JVM `graft_*`
+    * parent in tmpdir ([[QueryDef.tempDir]]), which a shutdown hook
+    * deletes; a JVM killed before its hooks run leaves it behind — at
+    * 300+ such queries per Verify/Bench invocation, repeated leftovers
+    * once filled 79 GB and killed a test run with TASK_WRITE_FAILED
     * (disk full, round 10). Sweeping our own prefix older than 2 h at
     * main start keeps the current run's dirs (and any concurrent run's)
     * intact while bounding the accumulation at one round's worth.
@@ -41,14 +42,20 @@ object Preflight {
       } catch { case _: Exception => Nil }
     var n = 0L
     doomed.foreach { d =>
-      try {
-        java.nio.file.Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-        n += 1
-      } catch { case _: Exception => () } // races with a concurrent sweep: fine
+      try { deleteTree(d); n += 1 }
+      catch { case _: Exception => () } // races with a concurrent sweep: fine
     }
     if (n > 0) Seq(s"[preflight] swept $n stale graft_* temp dirs (> ${maxAgeHours}h old)")
     else Nil
+  }
+
+  /** Deletes `root` and everything under it, deepest entries first;
+    * throws on the first entry that cannot be deleted. */
+  private[graft] def deleteTree(root: java.nio.file.Path): Unit = {
+    val s = java.nio.file.Files.walk(root)
+    try s.sorted(java.util.Comparator.reverseOrder())
+      .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
+    finally s.close()
   }
 
   /** Newest last-modified time of any entry under `p` (the dir itself,

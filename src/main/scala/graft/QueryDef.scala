@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Path}
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One named query in the engine's declared inventory (SURVEY §2.B).
@@ -26,4 +29,21 @@ object QueryDef {
     * associative; decimal addition is). Per-row double arithmetic is
     * order-free and needs no such treatment. */
   val FloatNote: String = "decimal-accumulator convention"
+
+  /** A new directory for the scratch table a query builds, named
+    * `prefix…`. Such a table must outlive the query's function (its
+    * DataFrame reads it lazily), so every one goes under one parent per
+    * JVM, `graft_tables_…` in the system temp dir, which a shutdown hook
+    * deletes. A JVM killed before its hooks run leaves the parent to the
+    * stale `graft_*` sweep in [[Preflight.sweepStaleTemp]]. */
+  private[graft] def tempDir(prefix: String): String =
+    Files.createTempDirectory(tempRoot, prefix).toString
+
+  private lazy val tempRoot: Path = {
+    val root = Files.createTempDirectory("graft_tables_")
+    sys.addShutdownHook {
+      try Preflight.deleteTree(root) catch { case NonFatal(_) => () }
+    }
+    root
+  }
 }

@@ -2595,7 +2595,7 @@ object Similarity {
   val q306 = QueryDef(
     "q306_persistent_ann_index",
     (s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q306_").toString
+      val root = QueryDef.tempDir("graft_q306_")
       val sink = new graft.sinks.ManifestUpsertSink(root, "vec_id", buckets = 8)
       val cents = kmeansCentroids(s, d)
       val e = embDouble(s, d).select(col("vec_id"), col("emb"))
@@ -2663,7 +2663,7 @@ object Similarity {
   val q309 = QueryDef(
     "q309_ann_index_serve",
     (s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q309_").toString
+      val root = QueryDef.tempDir("graft_q309_")
       val sink = new graft.sinks.ManifestUpsertSink(root, "vec_id", buckets = 4)
       val cents = kmeansCentroids(s, d)
       val e = embDouble(s, d).select(col("vec_id"), col("emb"))
@@ -2790,7 +2790,7 @@ object Similarity {
   val q321 = QueryDef(
     "q321_graph_ann_serve",
     (s, d) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_q321_").toString
+      val root = QueryDef.tempDir("graft_q321_")
       val M = 12  // graph out-degree
       val B = 16  // beam width (3 hops x beam 16 x degree <=12 x 8 entries
                   // reaches recall@10 = 100% on this corpus — measured,

@@ -2498,9 +2498,11 @@ object ManifestUpsertSink {
     * can maintain downstream aggregates DIFFERENTIALLY from the feed
     * alone (q301's IVM shape) without re-reading the table. old_hash =
     * new_hash marks a value-identical rewrite. Compactions record no
-    * feed (no row changes). */
+    * feed (no row changes). Building the frame runs no Spark job: one
+    * job writes all of a version's feed files, so the first file's
+    * footer gives the schema ([[graft.Tables.readParquet]]). */
   def readChanges(spark: SparkSession, root: String, version: Long): DataFrame =
-    spark.read.parquet(changeFiles(root, version): _*)
+    graft.Tables.readParquet(spark, changeFiles(root, version))
 
   private def vacuum(root: String, store: TableStore, keep: Int, keepChanges: Int,
       orphanGrace: Option[Long], retainMs: Option[Long] = None): Unit = {

@@ -1,6 +1,5 @@
 package graft.sinks
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 
@@ -39,7 +38,7 @@ object SinkQueries {
         lpad(col("event_id").cast("string"), 56, "0").as("sequenceNumber"),
         col("props").as("data"),
         col("ts"))
-      val dir = Files.createTempDirectory("graft_q38_").toString
+      val dir = QueryDef.tempDir("graft_q38_")
       LineFileSink.write(raw, dir, col("ts"))
       LineFileSink.read(s, dir)
         .select(col("sequenceNumber"), col("data"))
@@ -84,7 +83,7 @@ object SinkQueries {
         lpad(col("event_id").cast("string"), 56, "0").as("sequenceNumber"),
         col("props").as("data"),
         col("ts"))
-      val dir = Files.createTempDirectory("graft_q90_").toString
+      val dir = QueryDef.tempDir("graft_q90_")
       LineFileSink.writeSeqNamed(raw, dir, col("ts"))
       s.read.format("graft-records").load(dir)
         .orderBy(col("sequenceNumber"))
@@ -106,7 +105,7 @@ object SinkQueries {
     (s, d) => {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
-      val dir = Files.createTempDirectory("graft_q163_").toString + "/out"
+      val dir = QueryDef.tempDir("graft_q163_") + "/out"
       docs.write.option("compression", "gzip").json(dir)
       s.read
         .schema("doc_id LONG, source STRING, lang STRING, text STRING")
@@ -128,7 +127,7 @@ object SinkQueries {
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("source"),
           concat(lit("v,\""), col("source"), lit("\"\nrow:"), col("doc_id")).as("hostile"))
-      val dir = Files.createTempDirectory("graft_q164_").toString + "/out"
+      val dir = QueryDef.tempDir("graft_q164_") + "/out"
       docs.write.option("header", "true").csv(dir)
       s.read
         .schema("doc_id LONG, source STRING, hostile STRING")
@@ -154,7 +153,7 @@ object SinkQueries {
       val ev = Tables.events(s, d)
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"),
           col("value"))
-      val dir = Files.createTempDirectory("graft_q165_").toString + "/out"
+      val dir = QueryDef.tempDir("graft_q165_") + "/out"
       ev.write.option("compression", "zstd").orc(dir)
       s.read
         .schema("event_id LONG, user_id LONG, event_type STRING, ts TIMESTAMP, value DOUBLE")
@@ -236,7 +235,7 @@ object SinkQueries {
   val q294 = QueryDef(
     "q294_manifest_merge",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q294_").toString
+      val root = QueryDef.tempDir("graft_q294_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -276,7 +275,7 @@ object SinkQueries {
   val q295 = QueryDef(
     "q295_manifest_cdf",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q295_").toString
+      val root = QueryDef.tempDir("graft_q295_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -335,7 +334,7 @@ object SinkQueries {
   val q298 = QueryDef(
     "q298_manifest_change_feed",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q298_").toString
+      val root = QueryDef.tempDir("graft_q298_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -378,7 +377,7 @@ object SinkQueries {
   val q300 = QueryDef(
     "q300_manifest_sql_surface",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q300_").toString
+      val root = QueryDef.tempDir("graft_q300_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -413,7 +412,7 @@ object SinkQueries {
   val q301 = QueryDef(
     "q301_cdc_incremental_agg",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q301_").toString
+      val root = QueryDef.tempDir("graft_q301_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -529,7 +528,7 @@ object SinkQueries {
     "q215_binaryfile_ingest",
     (s, d) => {
       import java.awt.image.BufferedImage
-      val dir = Files.createTempDirectory("graft_q215_").toString
+      val dir = QueryDef.tempDir("graft_q215_")
       (0 until 12).foreach { i =>
         val img = new BufferedImage(8 + i, 5 + (i % 3), BufferedImage.TYPE_INT_RGB)
         javax.imageio.ImageIO.write(img, "png", new java.io.File(dir, f"img_$i%02d.png"))
@@ -554,7 +553,7 @@ object SinkQueries {
   val q216 = QueryDef(
     "q216_xml_roundtrip",
     (s, d) => {
-      val dir = Files.createTempDirectory("graft_q216_").toString + "/out"
+      val dir = QueryDef.tempDir("graft_q216_") + "/out"
       Tables.nation(s, d)
         .write.format("xml").option("rootTag", "nations").option("rowTag", "nation")
         .save(dir)
@@ -583,7 +582,7 @@ object SinkQueries {
   val q228 = QueryDef(
     "q228_schema_evolution",
     (s, d) => {
-      val dir = Files.createTempDirectory("graft_q228_").toString + "/docs"
+      val dir = QueryDef.tempDir("graft_q228_") + "/docs"
       val docs = Tables.documents(s, d)
       docs.select(col("doc_id"), col("lang"))
         .write.parquet(dir + "/batch=1")
@@ -618,7 +617,7 @@ object SinkQueries {
   val q302 = QueryDef(
     "q302_manifest_point_lookup",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q302_").toString
+      val root = QueryDef.tempDir("graft_q302_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -663,7 +662,7 @@ object SinkQueries {
   val q303 = QueryDef(
     "q303_manifest_skipping",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q303_").toString
+      val root = QueryDef.tempDir("graft_q303_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 4)
       val base = Tables.orders(s, d).select(col("o_orderkey").as("key"),
         col("o_totalprice").cast("double").as("price"), lit(0L).as("seq"))
@@ -698,7 +697,7 @@ object SinkQueries {
   val q304 = QueryDef(
     "q304_cdc_join_ivm",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q304_").toString
+      val root = QueryDef.tempDir("graft_q304_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_nationkey").cast("long").as("nationkey"),
@@ -786,7 +785,7 @@ object SinkQueries {
   val q305 = QueryDef(
     "q305_manifest_zorder",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q305_").toString
+      val root = QueryDef.tempDir("graft_q305_")
       val sink = new ManifestUpsertSink(root, "event_id", buckets = 2)
       val base = Tables.events(s, d).select(col("event_id"), col("user_id"),
         expr("ts_ns div 86400000000000").as("dd"),
@@ -822,7 +821,7 @@ object SinkQueries {
   val q307 = QueryDef(
     "q307_cdc_delete_ivm",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q307_").toString
+      val root = QueryDef.tempDir("graft_q307_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -906,7 +905,7 @@ object SinkQueries {
   val q308 = QueryDef(
     "q308_manifest_dsv2_write",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q308_").toString
+      val root = QueryDef.tempDir("graft_q308_")
       Tables.customer(s, d).select(col("c_custkey").as("key"),
           col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
         .write.format("graft-manifest").option("orderCol", "seq")
@@ -949,7 +948,7 @@ object SinkQueries {
   val q310 = QueryDef(
     "q310_manifest_sql_catalog",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q310_").toString
+      val root = QueryDef.tempDir("graft_q310_")
       val cat = s"graft_q310_${q310Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -996,7 +995,7 @@ object SinkQueries {
   val q311 = QueryDef(
     "q311_scd2_history",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q311_").toString
+      val root = QueryDef.tempDir("graft_q311_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val base = Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq"))
@@ -1052,7 +1051,7 @@ object SinkQueries {
   val q312 = QueryDef(
     "q312_timestamp_travel",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q312_").toString
+      val root = QueryDef.tempDir("graft_q312_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       sink.upsertBatch(Tables.customer(s, d).select(col("c_custkey").as("key"),
         col("c_acctbal").cast("double").as("bal"), lit(0L).as("seq")), "seq", 0L)
@@ -1086,7 +1085,7 @@ object SinkQueries {
   val q313 = QueryDef(
     "q313_restore",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q313_").toString
+      val root = QueryDef.tempDir("graft_q313_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 8)
       val cust = Tables.customer(s, d)
       val base = cust.select(col("c_custkey").as("key"),
@@ -1139,8 +1138,8 @@ object SinkQueries {
   val q314 = QueryDef(
     "q314_quality_quarantine",
     (s, d) => {
-      val acceptRoot = Files.createTempDirectory("graft_q314a_").toString
-      val quarRoot = Files.createTempDirectory("graft_q314q_").toString
+      val acceptRoot = QueryDef.tempDir("graft_q314a_")
+      val quarRoot = QueryDef.tempDir("graft_q314q_")
       val rules = Seq(
         "lang_latin" -> col("lang").isin("en", "de", "fr", "es"),
         "len_min" -> (col("n_chars") >= 100L))
@@ -1190,8 +1189,8 @@ object SinkQueries {
   val q315 = QueryDef(
     "q315_shallow_clone",
     (s, d) => {
-      val srcRoot = Files.createTempDirectory("graft_q315s_").toString
-      val clRoot = Files.createTempDirectory("graft_q315c_").toString
+      val srcRoot = QueryDef.tempDir("graft_q315s_")
+      val clRoot = QueryDef.tempDir("graft_q315c_")
       val sink = new ManifestUpsertSink(srcRoot, "key", buckets = 4)
       val base = Tables.part(s, d).select(col("p_partkey").as("key"),
         col("p_retailprice").cast("double").as("price"), lit(0L).as("seq"))
@@ -1238,7 +1237,7 @@ object SinkQueries {
   val q316 = QueryDef(
     "q316_sql_merge_into",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q316_").toString
+      val root = QueryDef.tempDir("graft_q316_")
       val cat = s"graft_q316_${q316Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1290,7 +1289,7 @@ object SinkQueries {
   val q317 = QueryDef(
     "q317_sql_update",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q317_").toString
+      val root = QueryDef.tempDir("graft_q317_")
       val cat = s"graft_q317_${q317Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1328,7 +1327,7 @@ object SinkQueries {
   val q318 = QueryDef(
     "q318_composite_key",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q318_").toString
+      val root = QueryDef.tempDir("graft_q318_")
       val cat = s"graft_q318_${q318Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1380,7 +1379,7 @@ object SinkQueries {
   val q319 = QueryDef(
     "q319_partitioned_retention",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q319_").toString
+      val root = QueryDef.tempDir("graft_q319_")
       val sink = new ManifestUpsertSink(root, "key", buckets = 4,
         partitionCol = Some("year_date"))
       val rows = Tables.orders(s, d).select(
@@ -1420,7 +1419,7 @@ object SinkQueries {
   val q322 = QueryDef(
     "q322_sql_maintenance",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q322_").toString
+      val root = QueryDef.tempDir("graft_q322_")
       val cat = s"graft_q322_${q322Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1472,9 +1471,9 @@ object SinkQueries {
   val q323 = QueryDef(
     "q323_lake_star_join",
     (s, d) => {
-      val root1 = Files.createTempDirectory("graft_q323f_").toString
-      val root2 = Files.createTempDirectory("graft_q323c_").toString
-      val root3 = Files.createTempDirectory("graft_q323n_").toString
+      val root1 = QueryDef.tempDir("graft_q323f_")
+      val root2 = QueryDef.tempDir("graft_q323c_")
+      val root3 = QueryDef.tempDir("graft_q323n_")
       // fact: per-customer spend rolled up from orders, keyed by cust
       val spend = Tables.orders(s, d).groupBy(col("o_custkey").as("cust"))
         .agg(sum(col("o_totalprice").cast("decimal(28,10)")).cast("double").as("spend"),
@@ -1533,7 +1532,7 @@ object SinkQueries {
   val q324 = QueryDef(
     "q324_sql_rename_serve",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q324_").toString
+      val root = QueryDef.tempDir("graft_q324_")
       val cat = s"graft_q324_${q324Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1574,7 +1573,7 @@ object SinkQueries {
   val q325 = QueryDef(
     "q325_sql_describe_detail",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q325_").toString
+      val root = QueryDef.tempDir("graft_q325_")
       val cat = s"graft_q325_${q325Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1614,7 +1613,7 @@ object SinkQueries {
   val q326 = QueryDef(
     "q326_lake_metadata_census",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q326_").toString
+      val root = QueryDef.tempDir("graft_q326_")
       val rows = Tables.orders(s, d).select(
         col("o_orderkey").as("key"),
         when(col("o_orderkey") % 5 === 0, lit(null).cast("string"))
@@ -1655,7 +1654,7 @@ object SinkQueries {
   val q327 = QueryDef(
     "q327_sql_add_drop_column",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q327_").toString
+      val root = QueryDef.tempDir("graft_q327_")
       val cat = s"graft_q327_${q327Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1697,7 +1696,7 @@ object SinkQueries {
   val q328 = QueryDef(
     "q328_sql_type_widening",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q328_").toString
+      val root = QueryDef.tempDir("graft_q328_")
       val cat = s"graft_q328_${q328Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1748,7 +1747,7 @@ object SinkQueries {
   val q329 = QueryDef(
     "q329_deletion_vectors",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q329_").toString
+      val root = QueryDef.tempDir("graft_q329_")
       val cat = s"graft_q329_${q329Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1804,7 +1803,7 @@ object SinkQueries {
   val q330 = QueryDef(
     "q330_add_column_default",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q330_").toString
+      val root = QueryDef.tempDir("graft_q330_")
       val cat = s"graft_q330_${q330Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1853,7 +1852,7 @@ object SinkQueries {
   val q331 = QueryDef(
     "q331_analyze_table",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q331_").toString
+      val root = QueryDef.tempDir("graft_q331_")
       val cat = s"graft_q331_${q331Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1900,7 +1899,7 @@ object SinkQueries {
   val q332 = QueryDef(
     "q332_mor_upsert",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q332_").toString
+      val root = QueryDef.tempDir("graft_q332_")
       val cat = s"graft_q332_${q332Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -1966,7 +1965,7 @@ object SinkQueries {
   val q333 = QueryDef(
     "q333_analyze_columns",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q333_").toString
+      val root = QueryDef.tempDir("graft_q333_")
       val cat = s"graft_q333_${q333Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -2015,7 +2014,7 @@ object SinkQueries {
   val q334 = QueryDef(
     "q334_mor_mixed_merge",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q334_").toString
+      val root = QueryDef.tempDir("graft_q334_")
       val cat = s"graft_q334_${q334Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)
@@ -2080,7 +2079,7 @@ object SinkQueries {
   val q335 = QueryDef(
     "q335_branch_fast_forward",
     (s, d) => {
-      val root = Files.createTempDirectory("graft_q335_").toString
+      val root = QueryDef.tempDir("graft_q335_")
       val cat = s"graft_q335_${q335Seq.incrementAndGet()}"
       s.conf.set(s"spark.sql.catalog.$cat",
         classOf[graft.sources.ManifestCatalog].getName)

@@ -1,12 +1,17 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, RangePartitioning, SinglePartition}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.ArrayJaccard
 
-/** GraftExtensions: the native tier must be reachable from pure SQL, and
-  * the JaccardFusion rule must rewrite the naive composition into the
-  * fused expression. */
+/** GraftExtensions: the native tier must be reachable from pure SQL, the
+  * JaccardFusion rule must rewrite the naive composition into the fused
+  * expression, and a small global sort must skip its range-sampling job
+  * without changing its rows or their order. */
 class ExtensionsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -216,5 +221,72 @@ class ExtensionsSpec extends AnyFunSuite {
         (src, best.getLong(1), best.getInt(2))
       }.toSet
     assert(first.collect().map(r => (r.getString(0), r.getLong(1), r.getInt(2))).toSet == expect)
+  }
+
+  // ------------------------------------------------ SmallSortSinglePartition
+
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  /** Partitionings of the shuffles in `df`'s final (executed) plan. */
+  private def shuffles(df: Dataset[_]): Seq[Partitioning] =
+    Plans.collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }
+
+  private def isRange(p: Partitioning): Boolean = p.isInstanceOf[RangePartitioning]
+
+  /** minPartitionSize 1 byte: no input fits the size AQE coalesces into
+    * one partition, so the rule never fires. */
+  private def gateOff[T](body: => T): T =
+    TestSpark.withConf("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1b")(body)
+
+  // 4000 rows over 4 range partitions, sorted on a non-monotone key
+  private def smallSort: DataFrame =
+    spark.range(0, 4000, 1, 4)
+      .select(((col("id") * 7919) % 1000).as("k"), col("id"))
+      .orderBy(col("k"), col("id").desc)
+
+  test("a small global sort shuffles into one partition and skips the sampling job") {
+    val (onJobs, on) = TestSpark.jobsOf { val df = smallSort; (df.collect().toSeq, shuffles(df)) }
+    val (offJobs, off) = gateOff {
+      TestSpark.jobsOf { val df = smallSort; (df.collect().toSeq, shuffles(df)) }
+    }
+    assert(on._2 == Seq(SinglePartition), on._2)
+    assert(off._2.size == 1 && isRange(off._2.head), off._2)
+    assert(onJobs == offJobs - 1, s"jobs: rule $onJobs, gate off $offJobs")
+    assert(on._1 == off._1, "same rows in the same order")
+    assert(on._1.map(r => (r.getLong(0), r.getLong(1))) ==
+      (0L until 4000L).map(i => ((i * 7919) % 1000, i)).sortBy { case (k, i) => (k, -i) })
+  }
+
+  test("the sort keeps its range shuffle without AQE coalescing") {
+    TestSpark.withConf("spark.sql.adaptive.coalescePartitions.enabled", "false") {
+      val df = smallSort
+      df.collect()
+      assert(shuffles(df).map(isRange) == Seq(true), shuffles(df))
+    }
+  }
+
+  test("a sort over a finished stage decides on its runtime size") {
+    // 2M rows: the plan estimates the aggregate's input at 16 MB, over
+    // the 1 MB gate; its 10 groups measure a few hundred bytes once the
+    // first stage has run, and the re-optimized plan sorts in one task
+    def q = spark.range(0, 2000000, 1, 4).groupBy((col("id") % 10).as("g"))
+      .agg(count(lit(1)).as("n")).orderBy(col("g"))
+    assert(q.queryExecution.optimizedPlan.stats.sizeInBytes > (1L << 20))
+    val df = q
+    assert(shuffles(df).headOption.exists(isRange), "initial plan: " + shuffles(df))
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
+      (0L until 10L).map(_ -> 200000L))
+    // the final plan, outermost shuffle first
+    assert(shuffles(df).headOption.contains(SinglePartition), shuffles(df))
+    val off = gateOff { val d = q; d.collect(); shuffles(d) }
+    assert(off.exists(isRange), off)
+  }
+
+  test("repartitionByRange keeps its range layout") {
+    val df = spark.range(0, 4000, 1, 4).repartitionByRange(4, col("id"))
+    assert(df.collect().length == 4000)
+    assert(shuffles(df).map(isRange) == Seq(true), shuffles(df))
   }
 }

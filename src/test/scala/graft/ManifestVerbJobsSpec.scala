@@ -1,10 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sinks.ManifestUpsertSink
@@ -57,17 +54,7 @@ class ManifestVerbJobsSpec extends AnyFunSuite {
     sink
   }
 
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    TestListenerBus.drain(sc)
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    sc.addSparkListener(listener)
-    try { body; TestListenerBus.drain(sc); jobs.get }
-    finally sc.removeSparkListener(listener)
-  }
+  private def jobsOf(body: => Unit): Int = TestSpark.jobsOf(body)._1
 
   private def verbJobs(): Map[String, Int] = {
     import spark.implicits._

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole suite — Spark startup dominates
@@ -26,5 +30,19 @@ object TestSpark {
     spark.conf.set(key, value)
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** The Spark jobs `body` starts, and its result. The listener bus is
+    * drained before and after, so no other body's jobs are counted. */
+  def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    TestListenerBus.drain(sc)
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(s: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    sc.addSparkListener(listener)
+    try { val r = body; TestListenerBus.drain(sc); (jobs.get, r) }
+    finally sc.removeSparkListener(listener)
   }
 }
