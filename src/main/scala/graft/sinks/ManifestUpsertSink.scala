@@ -2271,15 +2271,16 @@ object ManifestUpsertSink {
     else {
       val keyCols = splitKeyCols(m.keyCol.getOrElse(throw new IllegalStateException(
         "manifest carries deletion vectors but no keyCol header — corrupt manifest")))
-      val dvKeys = readDvKeys(df.sparkSession, m, keyCols, dvs.map(_.path))
+      val dvKeys = readDvKeys(df.sparkSession, m.physSchema, m.renames, keyCols, dvs.map(_.path))
       df.join(broadcast(dvKeys), keyCols, "left_anti")
     }
   }
 
-  /** The key tuples of the dv files `paths` under `m`, in LOGICAL key
-    * names. A dv file spells the key as it was named when the dv was
-    * written, and no commit clears the rename mapping while a dv of an
-    * older spelling stays live: a full compaction clears the mapping
+  /** The key tuples of the dv files `paths`, in LOGICAL key names, under
+    * a manifest's schema stamp `physSchema` and rename mapping `renames`
+    * (the scan's dv fold reads through here too). A dv file spells the
+    * key as it was named when the dv was written, and no commit clears
+    * the rename mapping while a dv of an older spelling stays live: a full compaction clears the mapping
     * together with every dv it folds, one that rebases onto a winner
     * adopts the winner's mapping along with the winner's dvs
     * ([[commitRebasing]]), and epoch rewrites commit no dvs. So with no
@@ -2288,12 +2289,12 @@ object ManifestUpsertSink {
     * walk, and so no schema-merge Spark job. Otherwise mergeSchema spans
     * the key-rename vintages and the rename fold coalesces old and new
     * spellings exactly as it does for data files. */
-  private def readDvKeys(spark: SparkSession, m: Manifest, keyCols: Seq[String],
-      paths: Seq[String]): DataFrame =
-    m.physSchema.filter(_ => m.renames.isEmpty).map(StructType.fromDDL) match {
+  private[graft] def readDvKeys(spark: SparkSession, physSchema: Option[String],
+      renames: Seq[(String, String)], keyCols: Seq[String], paths: Seq[String]): DataFrame =
+    physSchema.filter(_ => renames.isEmpty).map(StructType.fromDDL) match {
       case Some(stamp) => spark.read.schema(StructType(keyCols.map(stamp(_)))).parquet(paths: _*)
       case None =>
-        applyRenames(spark.read.option("mergeSchema", "true").parquet(paths: _*), m.renames)
+        applyRenames(spark.read.option("mergeSchema", "true").parquet(paths: _*), renames)
           .select(keyCols.map(col): _*)
     }
 
@@ -2344,7 +2345,8 @@ object ManifestUpsertSink {
           .withColumn(FseqCol, lit(s))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
       val dvKeys = dvs.groupBy(_.seq).toSeq.sortBy(_._1).map { case (s, ds) =>
-        readDvKeys(spark, m, keyCols, ds.map(_.path)).withColumn("__dvseq", lit(s))
+        readDvKeys(spark, m.physSchema, m.renames, keyCols, ds.map(_.path))
+          .withColumn("__dvseq", lit(s))
       }.reduce(_.unionByName(_))
       val cond = keyCols.map(k => data(k) === dvKeys(k)).reduce(_ && _) &&
         dvKeys("__dvseq") > data(FseqCol)

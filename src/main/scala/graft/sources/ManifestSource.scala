@@ -690,7 +690,8 @@ object ManifestSource {
     * bucket + stats: files provably filter-free are dropped before the
     * list is handed to Spark's parquet scan. The emitted [[ManifestScan]]
     * wraps that ordinary `ParquetScan` — Catalyst and Tungsten never see
-    * a bespoke reader, only a shorter file list — and adds the two
+    * a bespoke reader, only a shorter file list (plus the reader-side
+    * [[Fold]] a snapshot mid-evolution needs) — and adds the two
     * planner contracts stock parquet can't supply here:
     * [[org.apache.spark.sql.connector.read.SupportsReportStatistics]]
     * (post-pruning size/rows from the manifest sidecar, so a small or
@@ -866,12 +867,8 @@ object ManifestSource {
           case _ => pruned
         }
         val keptBuckets = kept.map(_.bucket).toSet
-        val keptDvs = resolved.dvs.filter(d => keptBuckets(d.bucket))
-        if (resolved.renames.isEmpty && keptDvs.isEmpty && resolved.defaults.isEmpty)
-          new ManifestScan(options, resolved, tableSchema, kept, pushedExprs, required)
-        else
-          new ManifestRenameScan(options, resolved, tableSchema, kept, pushedExprs,
-            required, keptDvs)
+        new ManifestScan(options, resolved, tableSchema, kept, pushedExprs, required,
+          resolved.dvs.filter(d => keptBuckets(d.bucket)))
     }
   }
 
@@ -903,12 +900,7 @@ object ManifestSource {
       // stays true
       val files: Array[PartitionedFile] = inner.planInputPartitions()
         .flatMap { case fp: FilePartition => fp.files }
-      val byBucket = files.groupBy { f =>
-        f.filePath.toString.split("/").collectFirst {
-          case seg if seg.startsWith("__bucket=") =>
-            seg.stripPrefix("__bucket=").toLong
-        }.getOrElse(-1L)
-      }
+      val byBucket = files.groupBy(f => bucketOfPath(f.filePath.toString))
       bucketIds.zipWithIndex.map { case (b, i) =>
         // splits of one file concatenate in offset order, so a bucket
         // whose single key-sorted file was size-split still reads in key
@@ -1067,7 +1059,7 @@ object ManifestSource {
     } yield v
   }
 
-  /** The DSv2 column-statistics map both scan shapes serve from an
+  /** The DSv2 column-statistics map the scan serves from an
     * `ANALYZE ... FOR COLUMNS` census: ndv + null count from the
     * colstats sidecar, min/max from the per-file sidecar (post-pruning,
     * catalyst-internal values). min/max is REQUIRED alongside ndv —
@@ -1136,96 +1128,30 @@ object ManifestSource {
     m
   }
 
-  /** Post-pruning planner statistics from the commit-time sidecar —
-    * shared by both scan shapes. Never under-reports: files missing
-    * byte sizes fall back to rows × schema width; any file missing from
-    * the sidecar entirely makes the whole estimate "unknown" (a too-
-    * small guess would broadcast a huge table, worse than a missed
-    * broadcast). */
-  private def sidecarStats(kept: Seq[FileEntry], resolved: Resolved,
-      tableSchema: StructType): V2Statistics = {
-    val conf = org.apache.spark.sql.internal.SQLConf.get
-    val stats = kept.map(e => resolved.stats.get(e.path))
-    val rows: Option[Long] =
-      if (stats.forall(_.isDefined)) Some(stats.flatten.map(_.rows).sum) else None
-    // per-row width for files whose sidecar predates byte sizes
-    val rowWidth = math.max(1L, tableSchema.defaultSize.toLong)
-    val bytes: Option[Long] =
-      if (stats.forall(_.isDefined))
-        Some(stats.flatten.map(s =>
-          if (s.bytes >= 0) (s.bytes * conf.fileCompressionFactor).toLong
-          else s.rows * rowWidth).sum)
-      else None
-    new V2Statistics {
-      override def sizeInBytes(): java.util.OptionalLong =
-        bytes.map(java.util.OptionalLong.of).getOrElse(java.util.OptionalLong.empty())
-      override def numRows(): java.util.OptionalLong =
-        rows.map(java.util.OptionalLong.of).getOrElse(java.util.OptionalLong.empty())
-    }
-  }
-
-  /** The scan for a snapshot with a LIVE rename mapping: SQL reads work
-    * immediately after a metadata-only RENAME COLUMN — no compaction
-    * prerequisite. The delegate parquet scan reads an EXPANDED physical
-    * schema (each renamed logical column plus all its retired source
-    * names, typed alike; mergeSchema nulls the vintages a file lacks)
-    * and a per-row codegen'd projection folds them back:
-    * `logical = coalesce(newest, ..., oldest)` — exactly the Scala
-    * path's [[ManifestUpsertSink.applyRenames]], applied inside the
-    * reader so Catalyst sees only logical names. Within one FILE only
-    * one vintage is ever non-null (upsertBatch refuses resurrected
-    * physical names), so the coalesce is a per-file column pick.
+  /** The reader-side FOLD of a snapshot mid-evolution, built once at
+    * scan construction and only when a live rename, a NOT-NULL-DEFAULT
+    * add or a kept deletion vector exists. SQL reads then work right
+    * after a metadata-only RENAME COLUMN or a merge-on-read DELETE — no
+    * compaction prerequisite.
     *
-    * Deliberately ROW-based (no columnar batches) — correctness first;
-    * the table reverts to the fully-vectorized [[ManifestScan]] the
-    * moment a compaction materializes the mapping, which stays the
-    * performance answer for a table that lives renamed. Pushed filters
-    * on a renamed column cannot bind inside old-vintage files (the
-    * physical name differs), which is safe: file-source data filters are
-    * always re-evaluated by the retained post-scan Filter, now over the
-    * folded rows. */
-  private[graft] final class ManifestRenameScan(
-      private val options: CaseInsensitiveStringMap,
-      resolved: Resolved, tableSchema: StructType, keptInit: Seq[FileEntry],
-      private val pushedExprs: Seq[Expression],
-      private val required: Option[StructType],
-      private val dvs: Seq[DvEntry] = Nil)
-      extends Scan with org.apache.spark.sql.connector.read.Batch
-      with SupportsReportStatistics with SupportsRuntimeFiltering {
-
-    @volatile private var kept: Seq[FileEntry] = keptInit
-
-    private[graft] def plannedFiles: Seq[String] = kept.map(_.path)
-
-    /** Join-time runtime filtering, exactly as [[ManifestScan]] offers it
-      * — a table mid-evolution (live rename, NOT-NULL-DEFAULT add, or
-      * deletion vectors) must not lose DPP-class bucket pruning until a
-      * compaction materializes the fold. The offered attributes are
-      * restricted to the scan's pruned OUTPUT, and renamed key columns
-      * are withheld: the runtime IN-set values arrive under the LOGICAL
-      * name, which is only provably the stored physical value when the
-      * name was never remapped (a folded coalesce may differ per
-      * vintage). */
-    override def filterAttributes(): Array[NamedReference] = {
-      val out = readSchema().fieldNames.toSet
-      val remapped = resolved.renames.map(_._2).toSet
-      val keyAttrs = resolved.keyInfo.toSeq.flatMap(_._1.split(",").map(_.trim))
-      (keyAttrs ++ resolved.partCol).distinct
-        .filter(n => out.contains(n) && !remapped.contains(n))
-        .map(org.apache.spark.sql.connector.expressions.Expressions.column)
-        .toArray
-    }
-
-    override def filter(filters: Array[Filter]): Unit = {
-      val pruned = pruneEntries(kept, resolved, tableSchema, filters.toSeq)
-      RuntimeFilterProbe.last = Some((options.get("path"), kept.size, pruned.size))
-      if (pruned.size < kept.size) {
-        kept = pruned
-        delegate = buildDelegate()
-      }
-    }
-
-    private val logical: StructType = required.getOrElse(tableSchema)
+    *  - RENAMES: the delegate parquet scan reads an EXPANDED physical
+    *    schema (each renamed logical column plus all its retired source
+    *    names, typed alike; mergeSchema nulls the vintages a file lacks)
+    *    and the reader folds them back, `logical = coalesce(newest, ...,
+    *    oldest)` — exactly the Scala path's
+    *    [[ManifestUpsertSink.applyRenames]], applied inside the reader so
+    *    Catalyst sees only logical names. Within one FILE only one
+    *    vintage is ever non-null (upsertBatch refuses resurrected
+    *    physical names), so the coalesce is a per-file column pick.
+    *    Pushed filters on a renamed column cannot bind inside old-vintage
+    *    files (the physical name differs), which is safe: file-source
+    *    data filters are always re-evaluated by the retained post-scan
+    *    Filter, now over the folded rows.
+    *  - DEFAULTS: absent or null bytes of a NOT-NULL-DEFAULT column read
+    *    as the declared literal.
+    *  - DELETION VECTORS: rows whose key tuple a newer dv lists drop. */
+  private final class Fold(resolved: Resolved, tableSchema: StructType,
+      logical: StructType, kept: Seq[FileEntry], dvs: Seq[DvEntry]) {
 
     /** The columns the READER must produce: the query's pruned output,
       * plus — only while deletion vectors are live — any key component
@@ -1245,7 +1171,9 @@ object ManifestSource {
     private def expand(st: StructType): StructType = StructType(st.fields.flatMap(f =>
       sources.getOrElse(f.name, Seq(f.name))
         .map(s => org.apache.spark.sql.types.StructField(s, f.dataType, nullable = true))))
-    private val physRequired = expand(fetched)
+    /** The delegate's table and required schemas, in physical names. */
+    val physTable: StructType = expand(tableSchema)
+    val physRequired: StructType = expand(fetched)
     // positions of each fetched field's sources within the expanded row
     private val positions: Seq[Seq[Int]] = {
       var i = -1
@@ -1267,10 +1195,11 @@ object ManifestSource {
       * Keys are FLOAT-NORMALIZED (−0.0 → 0.0, canonical NaN) on both the
       * collection side here and the per-row projection in the reader, so
       * byte equality agrees with the sink-side SQL anti-join on
-      * float/double key components. dv files carry write-time physical
-      * names; the same rename fold maps them onto the current logical
-      * key. */
-    private val dvFold: Option[(Seq[Int], Seq[org.apache.spark.sql.types.DataType],
+      * float/double key components. The keys come from the sink's own
+      * dv-key reader, which maps old-spelling dv files onto the current
+      * logical key; `input_file_name` ties each key back to its dv
+      * entry's (bucket, seq). */
+    private val dv: Option[(Seq[Int], Seq[org.apache.spark.sql.types.DataType],
         org.apache.spark.broadcast.Broadcast[DvFoldData])] =
       if (dvs.isEmpty) None
       else {
@@ -1281,13 +1210,8 @@ object ManifestSource {
         val keyTypes = keyIdx.map(fetched(_).dataType)
         val spark = SparkSession.active
         import org.apache.spark.sql.functions.{col, input_file_name}
-        // mergeSchema: dv files span KEY-RENAME vintages (old files spell
-        // the retired name); the same rename fold that maps data files
-        // coalesces them onto the current key. input_file_name ties each
-        // key back to its dv entry's (bucket, seq).
-        val dvKeys = ManifestUpsertSink.applyRenames(
-          spark.read.option("mergeSchema", "true").parquet(dvs.map(_.path): _*),
-          resolved.renames)
+        val dvKeys = ManifestUpsertSink.readDvKeys(spark, resolved.physSchema,
+          resolved.renames, keyNames, dvs.map(_.path))
           .select(keyNames.zip(keyTypes).map { case (n, t) => col(n).cast(t) } :+
             input_file_name().as("__dvfile"): _*)
         val proj = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
@@ -1342,55 +1266,15 @@ object ManifestSource {
         }.toMap
       }
 
-    private def buildDelegate(): Scan = {
-      val b = parquetScanBuilder(options, kept.map(_.path), resolved,
-        expand(tableSchema))
-      if (pushedExprs.nonEmpty) b.pushFilters(pushedExprs)
-      b.pruneColumns(physRequired)
-      b.build()
-    }
-
-    @volatile private var delegate: Scan = buildDelegate()
-
-    override def readSchema(): StructType = logical
-    override def toBatch: org.apache.spark.sql.connector.read.Batch = this
-    override def description(): String =
-      s"graft-manifest(fold${if (resolved.renames.nonEmpty) " renames" else ""}" +
-        s"${if (dvs.nonEmpty) s" dv=${dvs.map(_.rows).sum}keys" else ""}) " +
-        s"files=${kept.size}/${resolved.files.size} " + delegate.description()
-    override def estimateStatistics(): V2Statistics = {
-      val base = sidecarStats(kept, resolved, tableSchema)
-      // column stats flow through the FOLD scan too: an ANALYZE ... FOR
-      // COLUMNS census is computed over the logical snapshot (dv fold
-      // included) and keyed to this exact version, so a dv'd or
-      // defaulted table's joins keep their CBO cardinalities (live
-      // RENAMES never get here with colStats — resolve() goes dark on
-      // them, the names would misbind)
-      val cols = colStatsMap(kept, resolved, tableSchema,
-        readSchema().fieldNames.toSet)
-      new V2Statistics { // subtract the known-deleted rows
-        override def sizeInBytes(): java.util.OptionalLong = base.sizeInBytes()
-        override def numRows(): java.util.OptionalLong = {
-          val r = base.numRows()
-          if (r.isPresent)
-            java.util.OptionalLong.of(math.max(0L, r.getAsLong - dvs.map(_.rows).sum))
-          else r
-        }
-        override def columnStats(): java.util.Map[NamedReference,
-            org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = cols
-      }
-    }
-
-    override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] =
-      delegate.toBatch.planInputPartitions()
-    override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory = {
-      val factory = new RenameFoldReaderFactory(delegate.toBatch.createReaderFactory(),
-        fetched.fields.map(_.dataType).toSeq, positions, dvFold, logical.length,
-        defaultVals)
+    /** The delegate's reader factory wrapped in the fold. */
+    def factory(delegate: org.apache.spark.sql.connector.read.PartitionReaderFactory)
+        : org.apache.spark.sql.connector.read.PartitionReaderFactory = {
+      val factory = new RenameFoldReaderFactory(delegate,
+        fetched.fields.map(_.dataType).toSeq, positions, dv, logical.length, defaultVals)
       // spec probe: the factory IS the task closure's dv payload — its
       // serialized size must stay flat in table-wide dv volume (the keys
       // travel once per executor via the broadcast, not per task)
-      if (dvFold.nonEmpty) DvFoldProbe.lastFactoryBytes = {
+      if (dv.nonEmpty) DvFoldProbe.lastFactoryBytes = {
         val bos = new java.io.ByteArrayOutputStream()
         val oos = new java.io.ObjectOutputStream(bos)
         oos.writeObject(factory); oos.close()
@@ -1398,22 +1282,6 @@ object ManifestSource {
       }
       factory
     }
-
-    /** Value equality so scan/exchange reuse works for self-joins of a
-      * table mid-evolution (live rename / defaulted add / dvs) — same
-      * contract as [[ManifestScan.equals]]. `dvs` are (bucket, rows,
-      * path) triples of immutable files, so list equality is snapshot
-      * equality. */
-    override def equals(other: Any): Boolean = other match {
-      case o: ManifestRenameScan =>
-        options.asCaseSensitiveMap() == o.options.asCaseSensitiveMap() &&
-          kept == o.kept && dvs == o.dvs &&
-          pushedExprs.map(_.canonicalized) == o.pushedExprs.map(_.canonicalized) &&
-          required == o.required
-      case _ => false
-    }
-    override def hashCode(): Int =
-      java.util.Objects.hash(options.asCaseSensitiveMap(), kept, dvs, required)
   }
 
   /** The broadcast payload of a deletion-vector fold: per bucket, the
@@ -1459,13 +1327,14 @@ object ManifestSource {
     def reset(): Unit = { lastFactoryBytes = -1L; maxReaderKeys = -1; totalKeys = -1 }
   }
 
-  /** Row-level fold: wraps the delegate's (row-based) readers with a
-    * codegen'd `coalesce` projection from the expanded physical row to
-    * the fetched schema, then — when deletion vectors are live — drops
-    * rows whose key tuple is in the deleted set and projects surplus
-    * key columns away. Built per reader ON the executor; the factory
-    * ships only (dataTypes, positions, broadcast handle), and each
-    * reader materializes ONLY its own buckets' keys from the broadcast.
+  /** The [[Fold]] over the delegate's readers: a codegen'd `coalesce`
+    * projection from the expanded physical row to the fetched schema
+    * (columnar batches get the same fold as wrapper vectors), then —
+    * when deletion vectors are live — drops rows whose key tuple is in
+    * the deleted set and projects surplus key columns away. Built per
+    * reader ON the executor; the factory ships only (dataTypes,
+    * positions, broadcast handle), and each reader materializes ONLY its
+    * own buckets' keys from the broadcast.
     *
     * Sequence awareness: when every applicable dv is newer than every
     * file in the partition's buckets (always, for delete-only tables)
@@ -1907,15 +1776,18 @@ object ManifestSource {
   }
 
   /** The scan the connector hands Spark: an ordinary parquet scan over
-    * the pruned file list, PLUS planner statistics and runtime filtering.
+    * the pruned file list, PLUS planner statistics, runtime filtering,
+    * storage-partitioned-join layout and — only when the snapshot needs
+    * one — a reader-side [[Fold]].
     *
     *  - [[SupportsReportStatistics]]: sizeInBytes/rowCount summed from
     *    the manifest's stats sidecar over the POST-PRUNING file list —
     *    zero planning-time filesystem calls (the bytes were recorded at
-    *    commit time, with the footer stats). A dimension table — or a
-    *    fact table pruned to one bucket by a pushed point predicate —
-    *    reports its true small size, so Spark AUTO-BROADCASTS it; without
-    *    this every lake join defaults to shuffle (the planner assumes
+    *    commit time, with the footer stats) — minus the rows live
+    *    deletion vectors remove. A dimension table — or a fact table
+    *    pruned to one bucket by a pushed point predicate — reports its
+    *    true small size, so Spark AUTO-BROADCASTS it; without this every
+    *    lake join defaults to shuffle (the planner assumes
     *    `defaultSizeInBytes` = huge for unsized v2 scans), the single
     *    biggest silent plan miss at 100× scale. Files missing from the
     *    sidecar fall back to rows × schema width, then to "unknown"
@@ -1928,16 +1800,32 @@ object ManifestSource {
     *    bucket's files — dynamic partition pruning re-expressed for the
     *    bucket layout (plus `__pdate` partition dirs when the runtime
     *    filter is on the partition column). A 100-TB star join then
-    *    reads 1/buckets of the fact table instead of all of it. */
+    *    reads 1/buckets of the fact table instead of all of it.
+    *  - The FOLD (live rename, NOT-NULL-DEFAULT add or kept dvs) wraps
+    *    the delegate's reader factory in [[RenameFoldReaderFactory]],
+    *    which keeps the delegate's vectorized decode. Every contract
+    *    above, and the SPJ layout, holds for a folded scan too; with no
+    *    fold the scan reads exactly as the delegate does. */
   private[graft] final class ManifestScan(private val options: CaseInsensitiveStringMap,
       resolved: Resolved, tableSchema: StructType, keptInit: Seq[FileEntry],
       private val pushedExprs: Seq[Expression],
-      private val required: Option[StructType])
-      extends Scan with SupportsReportStatistics with SupportsRuntimeFiltering
+      private val required: Option[StructType],
+      private val dvs: Seq[DvEntry])
+      extends Scan with org.apache.spark.sql.connector.read.Batch
+      with SupportsReportStatistics with SupportsRuntimeFiltering
       with org.apache.spark.sql.connector.read.SupportsReportPartitioning
       with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
     @volatile private var kept: Seq[FileEntry] = keptInit
+
+    private val logical: StructType = required.getOrElse(tableSchema)
+
+    private val fold: Option[Fold] =
+      if (resolved.renames.isEmpty && dvs.isEmpty && resolved.defaults.isEmpty) None
+      else Some(new Fold(resolved, tableSchema, logical, keptInit, dvs))
+
+    /** Spec window: whether this scan reads through the fold. */
+    private[graft] def folded: Boolean = fold.isDefined
 
     /** STORAGE-PARTITIONED-JOIN mode: when the user enables Spark's v2
       * bucketing (`spark.sql.sources.v2.bucketing.enabled`) and the
@@ -1963,7 +1851,7 @@ object ManifestSource {
       // 4.x, so it alone must not flip every lake scan into SPJ layout
       val on = conf.v2BucketingEnabled && conf.getConfString(
         ManifestSource.PreserveGroupingConf, "false").toBoolean
-      val outCols = required.getOrElse(tableSchema).fieldNames.toSet
+      val outCols = logical.fieldNames.toSet
       resolved.keyInfo match {
         case Some((spec, _)) if on && kept.nonEmpty &&
             spec.split(",").map(_.trim).forall(outCols.contains) =>
@@ -1980,7 +1868,8 @@ object ManifestSource {
       * concatenated are not sorted — a fresh compact() restores the
       * one-file-per-bucket layout). Splits of the single file read in
       * offset order (GroupedBatch sorts them), so the partition-wide
-      * order claim holds. Ascending nulls-first, matching both the
+      * order claim holds; a dv drops rows of that file but never
+      * reorders the rest. Ascending nulls-first, matching both the
       * writer's sortWithinPartitions and Spark's default sort key. */
     override def outputOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
       (spjBuckets, resolved.keyInfo) match {
@@ -2012,9 +1901,10 @@ object ManifestSource {
     private[graft] def plannedFiles: Seq[String] = kept.map(_.path)
 
     private def buildDelegate(): Scan = {
-      val b = parquetScanBuilder(options, kept.map(_.path), resolved, tableSchema)
+      val b = parquetScanBuilder(options, kept.map(_.path), resolved,
+        fold.map(_.physTable).getOrElse(tableSchema))
       if (pushedExprs.nonEmpty) b.pushFilters(pushedExprs)
-      required.foreach(b.pruneColumns)
+      fold.map(_.physRequired).orElse(required).foreach(b.pruneColumns)
       b.build()
     }
 
@@ -2023,53 +1913,61 @@ object ManifestSource {
     // plans partitions from the rebuilt scan
     @volatile private var delegate: Scan = buildDelegate()
 
-    override def readSchema(): StructType = delegate.readSchema()
+    override def readSchema(): StructType =
+      if (fold.isEmpty) delegate.readSchema() else logical
 
-    override def toBatch: org.apache.spark.sql.connector.read.Batch = spjBuckets match {
-      case None => delegate.toBatch
-      case Some(bucketIds) => new GroupedBatch(delegate.toBatch, bucketIds)
+    // with no fold the Batch is the delegate's own; a folded scan is its
+    // own Batch, so only the reader factory changes
+    override def toBatch: org.apache.spark.sql.connector.read.Batch = {
+      val inner = if (fold.isEmpty) delegate.toBatch else this
+      spjBuckets.map(new GroupedBatch(inner, _)).getOrElse(inner)
+    }
+    override def planInputPartitions(): Array[org.apache.spark.sql.connector.read.InputPartition] =
+      delegate.toBatch.planInputPartitions()
+    override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory = {
+      val base = delegate.toBatch.createReaderFactory()
+      fold.map(_.factory(base)).getOrElse(base)
     }
 
-    override def description(): String =
-      s"graft-manifest files=${kept.size}/${resolved.files.size} ${delegate.description()}"
-    override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-      delegate.supportedCustomMetrics()
-    override def columnarSupportMode(): Scan.ColumnarSupportMode =
-      delegate.columnarSupportMode()
+    override def description(): String = {
+      val tag = if (fold.isEmpty) "" else
+        s"(fold${if (resolved.renames.nonEmpty) " renames" else ""}" +
+          s"${if (dvs.nonEmpty) s" dv=${dvs.map(_.rows).sum}keys" else ""})"
+      s"graft-manifest$tag files=${kept.size}/${resolved.files.size} ${delegate.description()}"
+    }
 
-    /** Post-pruning planner statistics from the commit-time sidecar,
-      * plus — when an `ANALYZE ... FOR COLUMNS` census exists for this
-      * version — DSv2 COLUMN statistics (ndv + null count per analyzed
-      * column still in the pruned output). Spark translates these into
-      * catalyst attribute stats, which is what makes cost-based join
-      * cardinality estimation (and DP join reordering) work on lake
-      * tables: without ndv a multi-join's intermediate cardinalities are
-      * unknown and CBO keeps the written order. Table-level ndv is
-      * reported unscaled after file pruning — an over-estimate of the
-      * pruned subset's ndv, the conventional (and planner-safe)
-      * approximation. */
+    /** Post-pruning planner statistics from the commit-time sidecar
+      * (rows net of live dv rows), plus — when an `ANALYZE ... FOR
+      * COLUMNS` census exists for this version — DSv2 COLUMN statistics
+      * (ndv + null count per analyzed column still in the pruned output).
+      * Spark translates these into catalyst attribute stats, which is
+      * what makes cost-based join cardinality estimation (and DP join
+      * reordering) work on lake tables: without ndv a multi-join's
+      * intermediate cardinalities are unknown and CBO keeps the written
+      * order. The census is computed over the logical snapshot (dv fold
+      * included), so a dv'd or defaulted table keeps it; live renames
+      * never carry one (resolve() goes dark on them, the names would
+      * misbind). Table-level ndv is reported unscaled after file pruning
+      * — an over-estimate of the pruned subset's ndv, the conventional
+      * (and planner-safe) approximation. */
     override def estimateStatistics(): V2Statistics = {
       val conf = org.apache.spark.sql.internal.SQLConf.get
       val stats = kept.map(e => resolved.stats.get(e.path))
-      val rows: Option[Long] =
-        if (stats.forall(_.isDefined)) Some(stats.flatten.map(_.rows).sum) else None
+      def known(v: => Long): java.util.OptionalLong =
+        if (stats.forall(_.isDefined)) java.util.OptionalLong.of(v)
+        else java.util.OptionalLong.empty()
       // per-row width for files whose sidecar predates byte sizes
       val rowWidth = math.max(1L, tableSchema.defaultSize.toLong)
-      val bytes: Option[Long] =
-        if (stats.forall(_.exists(s => s.bytes >= 0 || s.rows >= 0)))
-          Some(stats.flatten.map(s =>
-            if (s.bytes >= 0) (s.bytes * conf.fileCompressionFactor).toLong
-            else s.rows * rowWidth).sum)
-        else None
-      val colStats = colStatsMap(kept, resolved, tableSchema,
-        readSchema().fieldNames.toSet)
+      val bytes = known(stats.flatten.map(s =>
+        if (s.bytes >= 0) (s.bytes * conf.fileCompressionFactor).toLong
+        else s.rows * rowWidth).sum)
+      val rows = known(math.max(0L, stats.flatten.map(_.rows).sum - dvs.map(_.rows).sum))
+      val cols = colStatsMap(kept, resolved, tableSchema, readSchema().fieldNames.toSet)
       new V2Statistics {
-        override def sizeInBytes(): java.util.OptionalLong =
-          bytes.map(java.util.OptionalLong.of).getOrElse(java.util.OptionalLong.empty())
-        override def numRows(): java.util.OptionalLong =
-          rows.map(java.util.OptionalLong.of).getOrElse(java.util.OptionalLong.empty())
+        override def sizeInBytes(): java.util.OptionalLong = bytes
+        override def numRows(): java.util.OptionalLong = rows
         override def columnStats(): java.util.Map[NamedReference,
-            org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = colStats
+            org.apache.spark.sql.connector.read.colstats.ColumnStatistics] = cols
       }
     }
 
@@ -2078,12 +1976,16 @@ object ManifestSource {
       * column (`__pdate` dirs). Restricted to the scan's pruned OUTPUT —
       * Spark resolves these against the scan relation's attributes and
       * fails the whole query on a miss, so a projected-away key must not
-      * be offered. */
+      * be offered. Renamed key columns are withheld: the runtime IN-set
+      * values arrive under the LOGICAL name, which is only provably the
+      * stored physical value when the name was never remapped (a folded
+      * coalesce may differ per vintage). */
     override def filterAttributes(): Array[NamedReference] = {
       val out = readSchema().fieldNames.toSet
+      val remapped = resolved.renames.map(_._2).toSet
       val keyAttrs = resolved.keyInfo.toSeq.flatMap(_._1.split(",").map(_.trim))
       (keyAttrs ++ resolved.partCol).distinct
-        .filter(out.contains)
+        .filter(n => out.contains(n) && !remapped.contains(n))
         .map(org.apache.spark.sql.connector.expressions.Expressions.column)
         .toArray
     }
@@ -2100,15 +2002,18 @@ object ManifestSource {
     /** Value equality so exchange/scan reuse keeps working across two
       * loads of the same snapshot (the stock ParquetScan is a case class;
       * a reference-equality wrapper would silently disable reuse for
-      * self-joins). Conservative: pushdown state compares by string. */
+      * self-joins). Conservative: pushdown state compares canonicalized.
+      * `dvs` are (bucket, rows, path) records of immutable files, so list
+      * equality is snapshot equality. */
     override def equals(other: Any): Boolean = other match {
       case o: ManifestScan =>
         options.asCaseSensitiveMap() == o.options.asCaseSensitiveMap() &&
-          kept == o.kept && pushedExprs.map(_.canonicalized) == o.pushedExprs.map(_.canonicalized) &&
+          kept == o.kept && dvs == o.dvs &&
+          pushedExprs.map(_.canonicalized) == o.pushedExprs.map(_.canonicalized) &&
           required == o.required
       case _ => false
     }
     override def hashCode(): Int =
-      java.util.Objects.hash(options.asCaseSensitiveMap(), kept, required)
+      java.util.Objects.hash(options.asCaseSensitiveMap(), kept, dvs, required)
   }
 }

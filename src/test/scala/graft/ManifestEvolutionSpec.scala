@@ -547,13 +547,16 @@ class ManifestEvolutionSpec extends AnyFunSuite {
     // (null-fill absent, don't request dropped) — the performance path
     // must stay whole-stage/columnar, no row-based fallback
     val evolved = spark.read.format("graft-manifest").load(root).select("id", "score")
-    assert(scanOf(evolved).isInstanceOf[graft.sources.ManifestSource.ManifestScan],
+    assert(!scanOf(evolved).asInstanceOf[graft.sources.ManifestSource.ManifestScan].folded &&
+      evolved.queryExecution.executedPlan.collectFirst {
+        case b: BatchScanExec => b.supportsColumnar
+      }.contains(true),
       "add/drop must plan the plain vectorized scan")
     assert(evolved.as[(Long, Option[Double])].collect().toSeq == Seq((1L, None)))
     // a live rename is the one shape that needs the per-row fold
     sink.renameColumn(spark, "p", "payload")
     val renamed = spark.read.format("graft-manifest").load(root).select("id", "payload")
-    assert(!scanOf(renamed).isInstanceOf[graft.sources.ManifestSource.ManifestScan],
+    assert(scanOf(renamed).asInstanceOf[graft.sources.ManifestSource.ManifestScan].folded,
       "a live rename takes the folding scan until compaction materializes")
     assert(renamed.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
   }

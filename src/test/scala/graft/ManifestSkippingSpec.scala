@@ -539,6 +539,82 @@ class ManifestSkippingSpec extends AnyFunSuite {
     }
   }
 
+  test("storage-partitioned join over deletion vectors: dv'd same-layout tables still join with ZERO shuffle") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_spjdv_").toString
+    val cat = s"graft_spjdv_${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.ManifestCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    for ((t, c) <- Seq("a" -> "v", "b" -> "w"))
+      spark.sql(s"""CREATE TABLE $cat.$t (id BIGINT, $c DOUBLE, seq BIGINT)
+        TBLPROPERTIES ('keyCol'='id', 'orderCol'='seq', 'buckets'='8',
+          'mergeOnRead'='true')""")
+    (1L to 2000L).map(i => (i, i * 1.0, 0L)).toDF("id", "v", "seq")
+      .createOrReplaceTempView("spjdv_a")
+    (1L to 2000L).map(i => (i, i * 2.0, 0L)).toDF("id", "w", "seq")
+      .createOrReplaceTempView("spjdv_b")
+    spark.sql(s"INSERT INTO $cat.a SELECT * FROM spjdv_a")
+    spark.sql(s"INSERT INTO $cat.b SELECT * FROM spjdv_b")
+    // a merge-on-read DELETE: one side now reads through the dv fold
+    spark.sql(s"DELETE FROM $cat.a WHERE id IN (7, 13)")
+    assert(ManifestUpsertSink.latestManifest(s"$root/a").get.dvs.nonEmpty)
+    val saved = Seq(
+      "spark.sql.sources.v2.bucketing.enabled",
+      "spark.sql.sources.v2.bucketing.pushPartValues.enabled",
+      graft.sources.ManifestSource.PreserveGroupingConf,
+      "spark.sql.autoBroadcastJoinThreshold")
+      .map(k => k -> spark.conf.getOption(k))
+    def spj(on: Boolean): Unit =
+      spark.conf.set(graft.sources.ManifestSource.PreserveGroupingConf, on.toString)
+    def folded(df: DataFrame): Seq[Boolean] = df.queryExecution.sparkPlan.collect {
+      case b: BatchScanExec =>
+        b.scan.asInstanceOf[graft.sources.ManifestSource.ManifestScan].folded
+    }
+    try {
+      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+      spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      val sumSql = s"SELECT sum(a.v * b.w) AS s FROM $cat.a a JOIN $cat.b b ON a.id = b.id"
+      spj(on = false)
+      val off = spark.sql(sumSql).head().getDouble(0)
+      assert(off == 5337333564.0, s"SPJ-off sum $off")
+      spj(on = true)
+      val j = spark.sql(sumSql)
+      assert(folded(j).sorted == Seq(false, true), "one side must plan the dv fold")
+      assert(j.head().getDouble(0) == off)
+      val plan = j.queryExecution.executedPlan.toString
+      assert(plan.contains("SortMergeJoin"), s"expected a shuffle-class join:\n${plan.take(1200)}")
+      assert(!plan.contains("Exchange hashpartitioning"),
+        s"a dv'd table must keep the storage-partitioned join:\n${plan.take(2000)}")
+
+      // ---- after compact() each bucket is one key-sorted file; a MoR
+      // delete on both sides then keeps the ordering report (a dv drops
+      // rows of a sorted file, never reorders the rest): no shuffle and no
+      // per-task sort, rows equal to the SPJ-off plan
+      spark.sql(s"CALL $cat.system.compact('a')")
+      spark.sql(s"CALL $cat.system.compact('b')")
+      spark.sql(s"DELETE FROM $cat.a WHERE id IN (100, 1001)")
+      spark.sql(s"DELETE FROM $cat.b WHERE id IN (5, 1001)")
+      val rowSql = s"SELECT a.id, a.v, b.w FROM $cat.a a JOIN $cat.b b ON a.id = b.id"
+      spj(on = false)
+      val offRows = spark.sql(rowSql).as[(Long, Double, Double)].collect().sorted
+      assert(offRows.length == 1995 && !offRows.exists(r => Set(5L, 7L, 100L, 1001L)(r._1)))
+      spj(on = true)
+      val j2 = spark.sql(rowSql)
+      assert(folded(j2) == Seq(true, true), "both sides must plan the dv fold")
+      assert(j2.as[(Long, Double, Double)].collect().sorted.toSeq == offRows.toSeq)
+      val plan2 = j2.queryExecution.executedPlan.toString
+      assert(plan2.contains("SortMergeJoin"), plan2.take(1200))
+      assert(!plan2.contains("Exchange hashpartitioning"), plan2.take(2000))
+      assert(!plan2.contains("Sort ["),
+        s"a compacted, dv'd key-sorted SPJ join must plan with NO SortExec:\n${plan2.take(2000)}")
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("runtime filtering: a join-time IN-set on the fact's key drops non-matching buckets' files") {
     import spark.implicits._
     import graft.sources.ManifestSource.RuntimeFilterProbe
